@@ -14,6 +14,7 @@ a pure map stage that parallelizes with the scan.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -131,6 +132,67 @@ def split_quarantine(
     return ok, bad
 
 
+# doc_profile_fused's statistics, in output order, with their DDL types
+DOC_STATS = (
+    ("peak_amplitude", "double"),
+    ("rms_amplitude", "double"),
+    ("dynamic_range_db", "double"),
+    ("dc_offset", "double"),
+    ("silence_ratio", "double"),
+    ("potentially_clipped", "long"),
+    ("signal_energy", "double"),
+)
+# the J2 enrichment: the doc statistics every frame row carries
+DOC_ENRICH_COLS = ("rms_amplitude", "dynamic_range_db")
+
+
+def doc_profile_np(
+    tokens,
+    token_scale: float = TOKEN_SCALE,
+    frame_length: int = FRAME_LENGTH,
+) -> tuple[dict, str | None]:
+    """The per-doc arithmetic of doc_profile_fused on ONE token array
+    (None = NULL tokens): (DOC_STATS name -> value, reject_reason), NULL
+    reason = accepted. The fused kernel (fused.py) calls this same helper
+    for its quarantine verdict and the per-frame J2 columns, so frames,
+    doc_metadata and quarantine cannot drift apart (the reason
+    kernel.mask_kernel_outputs exists)."""
+    # NULL tokens quarantine as 'empty' like the expression twin
+    # reject_reason_col — never a np.asarray TypeError that kills the
+    # whole stage on one bad row
+    toks = (
+        np.zeros(0, dtype=np.float64)
+        if tokens is None
+        else np.asarray(tokens, dtype=np.float64)
+    )
+    x = toks / token_scale
+    n = len(x)
+    if n == 0:
+        return {name: 0 if t == "long" else 0.0 for name, t in DOC_STATS}, "empty"
+    ax = np.abs(x)
+    peak = float(ax.max())
+    energy = float(np.dot(x, x))
+    rms = float(np.sqrt(energy / n))
+    stats = {
+        "peak_amplitude": peak,
+        "rms_amplitude": rms,
+        "dynamic_range_db": float(20.0 * np.log10((peak + EPS) / (rms + EPS))),
+        "dc_offset": float(x.mean()),
+        "silence_ratio": float(np.mean(ax < SILENCE_THRESHOLD)),
+        "potentially_clipped": int(np.sum(ax > CLIP_THRESHOLD)),
+        "signal_energy": energy,
+    }
+    if not np.isfinite(x).all():
+        reason = "nonfinite"
+    elif energy <= MIN_SIGNAL_ENERGY:
+        reason = "low_energy"
+    elif n - (n % 2) < frame_length:
+        reason = "too_short"
+    else:
+        reason = None
+    return stats, reason
+
+
 def doc_profile_fused(
     seqs: DataFrame,
     token_scale: float = TOKEN_SCALE,
@@ -143,69 +205,29 @@ def doc_profile_fused(
     Catalyst higher-order fold at 67M tokens. Use this in pipelines; the
     expression forms remain for SQL-oracle parity."""
     import pandas as pd
-    import numpy as np
 
     carry = [c for c in carry_cols if c in seqs.columns]
     ddl = (
         "doc_id string"
         + "".join(f", {c} {dict(seqs.dtypes)[c]}" for c in carry)
-        + ", peak_amplitude double, rms_amplitude double,"
-        " dynamic_range_db double, dc_offset double, silence_ratio double,"
-        " potentially_clipped long, signal_energy double, reject_reason string"
+        + "".join(f", {name} {t}" for name, t in DOC_STATS)
+        + ", reject_reason string"
     )
+    columns = ["doc_id", *carry, *(name for name, _ in DOC_STATS), "reject_reason"]
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for i in range(len(pdf)):
-                raw = pdf["tokens"].iloc[i]
-                # NULL tokens quarantine as 'empty' like the expression
-                # twin reject_reason_col — never a np.asarray TypeError
-                # that kills the whole profiling stage on one bad row
-                toks = (
-                    np.zeros(0, dtype=np.float64)
-                    if raw is None
-                    else np.asarray(raw, dtype=np.float64)
+                stats, reason = doc_profile_np(
+                    pdf["tokens"].iloc[i], token_scale, frame_length
                 )
-                x = toks / token_scale
-                n = len(x)
-                if n == 0:
-                    stats = (0.0, 0.0, 0.0, 0.0, 0.0, 0, 0.0)
-                    reason = "empty"
-                else:
-                    ax = np.abs(x)
-                    peak = float(ax.max())
-                    energy = float(np.dot(x, x))
-                    rms = float(np.sqrt(energy / n))
-                    stats = (
-                        peak,
-                        rms,
-                        float(20.0 * np.log10((peak + EPS) / (rms + EPS))),
-                        float(x.mean()),
-                        float(np.mean(ax < SILENCE_THRESHOLD)),
-                        int(np.sum(ax > CLIP_THRESHOLD)),
-                        energy,
-                    )
-                    if not np.isfinite(x).all():
-                        reason = "nonfinite"
-                    elif energy <= MIN_SIGNAL_ENERGY:
-                        reason = "low_energy"
-                    elif n - (n % 2) < frame_length:
-                        reason = "too_short"
-                    else:
-                        reason = None
                 rows.append(
                     (pdf["doc_id"].iloc[i],
                      *[pdf[c].iloc[i] for c in carry],
-                     *stats, reason)
+                     *stats.values(), reason)
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", *carry, "peak_amplitude", "rms_amplitude",
-                         "dynamic_range_db", "dc_offset", "silence_ratio",
-                         "potentially_clipped", "signal_energy",
-                         "reject_reason"],
-            )
+            yield pd.DataFrame(rows, columns=columns)
 
     return seqs.select("doc_id", *carry, "tokens").mapInPandas(gen, ddl)
 

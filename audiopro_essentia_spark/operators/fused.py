@@ -13,6 +13,13 @@ frame_tokens + with_frame_features (odd-trim, tail truncation, frame-start
 time_ms, frame-end available_ts); tests assert equality against the numpy
 oracle for both paths.
 
+In the flagship plan (plans/pipeline.py) this is the ONLY token pass on
+the frame path: with validate=True + doc_stats=True the kernel also
+applies the doc-level quarantine and attaches the J2 doc statistics
+(rms_amplitude, dynamic_range_db) through aggregates.doc_profile_np —
+the doc profile's own per-doc arithmetic — instead of a second
+mapInPandas scan of the corpus broadcast-joined back onto the frames.
+
 Scale notes: input Arrow batches carry ~(rows x avg n_tok x 4) bytes; at
 1000-row batches and 16k-token docs that is ~64 MB per batch. Output rows
 are yielded in bounded chunks. One narrow stage: no shuffle, no JVM window
@@ -32,11 +39,11 @@ from ..constants import (
     ALL_FRAME_FEATURES,
     FRAME_LENGTH,
     HOP_LENGTH,
-    MIN_SIGNAL_ENERGY,
     N_MELS,
     SAMPLE_RATE,
     TOKEN_SCALE,
 )
+from .aggregates import DOC_ENRICH_COLS, doc_profile_np
 from .kernel import (
     BAND_NAMES,
     KERNEL_CHUNK,
@@ -63,13 +70,23 @@ def fused_frame_features(
     with_timestamps: bool = True,
     validate: bool = False,
     chroma_band: tuple[float, float] | None = None,
+    doc_stats: bool = False,
 ) -> DataFrame:
     """sequences(doc_id, tokens[, base_ts]) -> frame feature rows.
 
     Output: doc_id, frame_idx, time_ms[, event_ts, available_ts],
-    <feature columns>, ferror — the same shape with_frame_features yields
-    (frequency_bands flattened to fb_* columns here; see
-    plans/pipeline.py for re-nesting).
+    <feature columns>, ferror[, rms_amplitude, dynamic_range_db] — the
+    same shape with_frame_features yields (frequency_bands flattened to
+    fb_* columns here; see plans/pipeline.py for re-nesting).
+
+    `validate=True` skips the docs the doc profile quarantines (empty,
+    low_energy, too_short); `doc_stats=True` adds the J2 doc-level
+    columns (DOC_ENRICH_COLS), NULL on every frame of a doc whose
+    reject_reason is non-NULL — a 'nonfinite' doc is still framed (its
+    bad frames tagged ferror='nonfinite_frame') but carries no doc stats,
+    exactly a left-join miss against the accepted doc profile. Both
+    verdicts come from aggregates.doc_profile_np, the helper the profile
+    itself runs.
     """
     feats = tuple(features) if features else ALL_FRAME_FEATURES
     nm = n_mels or min(N_MELS, max(2, frame_length // 2 - 1))
@@ -80,6 +97,8 @@ def fused_frame_features(
     if has_ts:
         ddl += ", event_ts timestamp, available_ts timestamp"
     ddl += ", " + ", ".join(f"{n} {t}" for n, t in fields)
+    if doc_stats:
+        ddl += "".join(f", {c} double" for c in DOC_ENRICH_COLS)
 
     cols = ["doc_id", "tokens"] + (["base_ts"] if has_ts else [])
 
@@ -90,6 +109,7 @@ def fused_frame_features(
             win_parts: list[np.ndarray] = []
             base_us_parts: list[np.ndarray] = []
             n_frames_per_doc: list[int] = []
+            enrich_parts: list[tuple[float, ...]] = []
 
             for i in range(len(pdf)):
                 raw = pdf["tokens"].iloc[i]
@@ -111,35 +131,23 @@ def fused_frame_features(
                 n = len(toks) - (len(toks) % 2)  # odd-trim
                 if n < frame_length:
                     continue
-                if validate:
-                    # in-kernel quarantine (validator.py:80-123 semantics):
-                    # numpy sum beats an interpreted Catalyst fold ~10x, and
-                    # needs no extra scan or join. SAME threshold constant
-                    # as reject_reason_col — a literal here would let the
-                    # quarantine table and the fused output disagree.
-                    # Integer fast path: for int token arrays the squared
-                    # sum is EXACT in int64 (|tok| <= 32768 -> tok^2 <=
-                    # 2^30; overflow would need ~2^33 tokens), so the old
-                    # full-array astype(f64)+divide copy — pure DRAM
-                    # traffic on the kernel's hot path — collapses to one
-                    # read-only dot and a single division (strictly
-                    # tighter rounding than divide-then-pairwise-sum; a
-                    # doc can flip only with true energy within one ulp
-                    # of the threshold, i.e. integer energy at exactly
-                    # ~1073.74 — fixtures sit at 0 or thousands above).
-                    # float64 arrays (pyarrow NULL-element NaN) keep the
-                    # f64 path: NaN energy fails the <= and rides the
-                    # nonfinite ferror channel unchanged.
-                    if np.issubdtype(toks.dtype, np.integer):
-                        t64 = toks.astype(np.int64, copy=False)
-                        energy = float(np.dot(t64, t64)) / (
-                            token_scale * token_scale
-                        )
-                    else:
-                        x = toks.astype(np.float64) / token_scale
-                        energy = float(np.dot(x, x))
-                    if energy <= MIN_SIGNAL_ENERGY:
+                if validate or doc_stats:
+                    # in-kernel quarantine (validator.py:80-123 semantics)
+                    # and J2 enrichment from the doc profile's own helper:
+                    # no second token scan, no broadcast join, and the
+                    # verdict cannot disagree with the quarantine table.
+                    # Past the length check the reason is nonfinite,
+                    # low_energy or NULL.
+                    stats, reason = doc_profile_np(toks, token_scale, frame_length)
+                    if validate and reason == "low_energy":
                         continue
+                    if doc_stats:
+                        enrich_parts.append(
+                            tuple(
+                                stats[c] if reason is None else np.nan
+                                for c in DOC_ENRICH_COLS
+                            )
+                        )
                 wins = np.lib.stride_tricks.sliding_window_view(
                     toks[:n], frame_length
                 )[::hop]
@@ -169,6 +177,13 @@ def fused_frame_features(
             fidx = np.concatenate(frame_idx_parts)
             docs = np.repeat(np.asarray(doc_ids, dtype=object), n_frames_per_doc)
             base_us = np.concatenate(base_us_parts) if has_ts else None
+            if doc_stats:
+                # NaN -> NULL in the Arrow conversion (as for the features)
+                enrich = np.repeat(
+                    np.asarray(enrich_parts, dtype=np.float64),
+                    n_frames_per_doc,
+                    axis=0,
+                )
             offsets = np.concatenate(
                 ([0], np.cumsum(np.asarray(n_frames_per_doc, dtype=np.int64)))
             )
@@ -236,6 +251,9 @@ def fused_frame_features(
                 # ferror tagging + feature nulling: ONE shared helper with
                 # the Series->struct kernel UDF (kernel.mask_kernel_outputs)
                 out.update(mask_kernel_outputs(res, fields, hi - lo))
+                if doc_stats:
+                    for j, c in enumerate(DOC_ENRICH_COLS):
+                        out[c] = enrich[lo:hi, j]
                 yield pd.DataFrame(out)
 
     return seqs.select(*cols).mapInPandas(gen, ddl)

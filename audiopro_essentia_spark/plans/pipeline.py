@@ -1,22 +1,31 @@
 """The flagship end-to-end plan — the distributed `analyze_audio`.
 
-Mirrors the reference orchestrator's DAG
-(/root/reference/src/audiopro/analysis/controller.py:46-240): one scan
-fans out into three branches over the same cached input —
+Covers the reference orchestrator's DAG (reference
+src/audiopro/analysis/controller.py:46-240), which
+computes file metadata in its own branch and broadcast-joins it back onto
+every frame (J2, controller.py:196-210). Here the frame path is ONE token
+pass instead:
 
-    sequences ──┬── framing → fused feature kernel   (extract_features)
-                ├── doc-level aggregates              (get_file_metadata)
-                └── sessionization / tempo analog     (extract_rhythm)
+    sequences ──┬── fused kernel: framing + features + quarantine
+                │   + doc-level J2 columns           (extract_features)
+                └── doc profile → doc_metadata / quarantine
+                                                     (get_file_metadata)
 
-— then doc-level results broadcast-join back onto frame features (J2,
-controller.py:196-210), and the writer commits resumable checkpoints.
+The kernel attaches rms_amplitude / dynamic_range_db itself through the
+doc profile's own per-doc helper (aggregates.doc_profile_np), so each doc
+is decoded once on the frame path, and the doc profile is scanned only
+when doc_metadata / quarantine (or the writer's completion check) are
+evaluated. The writer then commits resumable checkpoints. The reference's
+third branch (extract_rhythm) is operators/rhythm.py, outside this plan.
 
 Scale design:
-- `.persist()` on the accepted input replaces the reference's shared
-  in-memory array across its ThreadPool branches (controller.py:126-147).
-- The doc-level join is `F.broadcast` (1 row/doc vs ~n_tok/512 rows/doc).
-- Framing is narrow (no shuffle); the kernel is one Arrow-batched map; the
-  only shuffles in the whole plan are the doc-stats hash-agg and the final
+- Framing, features, quarantine and enrichment are one narrow
+  Arrow-batched map: no shuffle, no join on the frame path.
+- `fused=False` is the oracle composition (split_quarantine ->
+  frame_tokens -> with_frame_features) and keeps the reference's J2 shape:
+  an `F.broadcast` left join of the accepted doc stats (1 row/doc vs
+  ~n_tok/512 rows/doc).
+- The only shuffles are the writer's completion aggregate and the final
   range partition for ordered output (O1: sortWithinPartitions after
   repartitionByRange — no global sort).
 """
@@ -30,7 +39,7 @@ from ..constants import DEFAULT_ERROR_BUDGET_PCT, FRAME_LENGTH, HOP_LENGTH, SAMP
 from ..operators.framing import frame_tokens
 from ..operators.fused import fused_frame_features, nest_frequency_bands
 from ..operators.kernel import with_frame_features
-from ..operators.aggregates import doc_profile_fused
+from ..operators.aggregates import DOC_ENRICH_COLS, doc_profile_fused
 from ..sources.sinks import CheckpointedWriter
 
 
@@ -74,29 +83,33 @@ def analyze_sequences(
     if cache_input:
         # NOT the default: caching raw token arrays cost 2x in profiling
         # (columnar cache decode beats a pruned parquet re-scan only when
-        # the source is remote/slow). Two pushdown scans is the scale-safe
-        # default.
+        # the source is remote/slow). The frame path scans the tokens
+        # once; only a caller that also evaluates the doc profile (or the
+        # out_dir flow's checkpoint) reads them a second time, and a
+        # pushdown re-scan is the scale-safe default for that.
         raw = raw.persist()
 
     # one vectorized pass: doc stats + quarantine verdict (A12-A14 + S2/S3)
     profile = doc_profile_fused(raw, frame_length=frame_length)
     if out_dir:
         # the write flow evaluates profile's mapInPandas in >= 2 plan
-        # branches (the broadcast doc_meta side of the write job AND the
-        # completion aggregate, plus any caller evaluation of
-        # doc_metadata/quarantine) — the CLAUDE.md multi-consumer rule:
-        # checkpoint the tiny one-row-per-doc output once instead of
-        # re-running a full token-decode pass per branch. Without
-        # out_dir (the bench path) there is exactly one consumer, and an
-        # eager checkpoint would only add cost.
+        # branches (the completion aggregate plus any caller evaluation
+        # of doc_metadata/quarantine) — the multi-consumer rule:
+        # checkpoint the tiny one-row-per-doc output once instead
+        # of re-running a full token-decode pass per branch. Without
+        # out_dir (the bench path) the frame path never reads the
+        # profile, and an eager checkpoint would only add cost.
         profile = profile.localCheckpoint()
     quarantined = profile.filter(F.col("reject_reason").isNotNull())
     doc_meta = profile.filter(F.col("reject_reason").isNull()).drop("reject_reason")
 
     if fused:
-        # performance path: framing + validation happen inside the kernel
-        # (operators/fused.py) — tokens cross to Python once, not 4x, and
-        # rejected docs are skipped without a separate filter scan
+        # performance path: framing, validation and the J2 enrichment all
+        # happen inside the kernel (operators/fused.py) — each doc's
+        # tokens cross to Python once, rejected docs are skipped without a
+        # filter scan, and the doc stats need no profile scan or join.
+        # Every input row emits only its own frames, so a doc_id repeated
+        # k times yields k x its frames (a join would yield k^2 x).
         feats = nest_frequency_bands(
             fused_frame_features(
                 raw,
@@ -106,7 +119,12 @@ def analyze_sequences(
                 sample_rate=sample_rate,
                 start_sample=start_sample,
                 validate=True,
+                doc_stats=True,
             )
+        )
+        # the join's column order: the doc stats come last
+        enriched = feats.select(
+            *[c for c in feats.columns if c not in DOC_ENRICH_COLS], *DOC_ENRICH_COLS
         )
     else:
         from ..operators.aggregates import split_quarantine
@@ -118,6 +136,7 @@ def analyze_sequences(
             hop=hop,
             sample_rate=sample_rate,
             start_sample=start_sample,
+            carry_cols=(),
             base_ts_col="base_ts" if "base_ts" in ok.columns else None,
         )
         feats = with_frame_features(
@@ -126,13 +145,16 @@ def analyze_sequences(
             frame_length=frame_length,
             sample_rate=sample_rate,
         )
-
-    # J2 enrichment: frames (big) <- doc stats (tiny) broadcast hash join
-    enriched = feats.join(
-        F.broadcast(doc_meta.select("doc_id", "rms_amplitude", "dynamic_range_db")),
-        "doc_id",
-        "left",
-    )
+        # the fused path's column list: frequency_bands after ferror
+        tail = [c for c in feats.columns if c == "frequency_bands"]
+        feats = feats.select(*[c for c in feats.columns if c not in tail], *tail)
+        # J2 enrichment: frames (big) <- doc stats (tiny) broadcast hash
+        # join — the oracle for the fused kernel's in-kernel doc stats
+        enriched = feats.join(
+            F.broadcast(doc_meta.select("doc_id", *DOC_ENRICH_COLS)),
+            "doc_id",
+            "left",
+        )
 
     if repartition_output:
         # O1 ordered emission without a global sort

@@ -3,8 +3,8 @@
 Measures the engine's headline workloads at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]:
 
-1. the flagship token pipeline (framing -> fused Arrow kernel -> doc
-   aggregates -> broadcast enrichment -> as-of label join) over a
+1. the flagship token pipeline (one fused Arrow kernel pass: framing,
+   features, quarantine and doc-level enrichment -> as-of label join) over a
    deterministically synthesized sequences table sized to the SF tier —
    reporting sequences/sec and tokens/sec (BASELINE.json metric), and
 2. the headline SQL-expressible queries from __spark_entry__ on the driver

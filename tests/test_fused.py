@@ -135,8 +135,10 @@ def test_fused_null_base_ts_yields_null_timestamps(spark):
 
 def test_analyze_sequences_unfused_path_matches_fused(spark, tmp_path):
     """The oracle-form composition (fused=False: split_quarantine ->
-    frame_tokens -> with_frame_features) must equal the fused kernel
-    pipeline row-for-row on the shared scalar features."""
+    frame_tokens -> with_frame_features -> broadcast join of the doc
+    profile) must equal the fused kernel pipeline row-for-row: the same
+    column list, the shared scalar features, and the J2 doc stats the
+    fused kernel computes in-kernel."""
     import pyarrow.parquet as pq
 
     from audiopro_essentia_spark.fixtures import make_sequences
@@ -147,20 +149,104 @@ def test_analyze_sequences_unfused_path_matches_fused(spark, tmp_path):
 
     res_f = analyze_sequences(spark, p, repartition_output=False, fused=True)
     res_u = analyze_sequences(spark, p, repartition_output=False, fused=False)
-    cols = ["doc_id", "frame_idx", "rms", "volume", "spectral_centroid"]
+    assert res_f["frame_features"].columns == res_u["frame_features"].columns
+    assert res_f["frame_features"].columns[-3:] == [
+        "frequency_bands", "rms_amplitude", "dynamic_range_db",
+    ]
+    cols = [
+        "doc_id", "frame_idx", "rms", "volume", "spectral_centroid",
+        "rms_amplitude", "dynamic_range_db",
+    ]
 
     def snap(df):
         return {
-            (r.doc_id, r.frame_idx): (
-                round(r.rms, 9), round(r.volume, 9),
-                round(r.spectral_centroid, 9),
+            (r.doc_id, r.frame_idx): tuple(
+                None if r[c] is None else round(r[c], 9) for c in cols[2:]
             )
             for r in df.select(*cols).collect()
         }
 
     a, b = snap(res_f["frame_features"]), snap(res_u["frame_features"])
     assert len(a) == len(b) > 100
+    assert all(v[-1] is not None for v in a.values())
     assert a == b
+
+
+def _write_seqs(path, docs):
+    """docs: (doc_id, token list or None) pairs -> a sequences parquet."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "doc_id": pa.array([d for d, _ in docs], pa.string()),
+            "tokens": pa.array([t for _, t in docs], pa.list_(pa.int32())),
+            "n_tok": pa.array([len(t or ()) for _, t in docs], pa.int32()),
+            "source": pa.array(["wiki"] * len(docs), pa.string()),
+        }),
+        path,
+    )
+
+
+def test_analyze_sequences_nonfinite_doc_has_no_doc_stats(spark, tmp_path):
+    """A NULL token element makes the doc 'nonfinite': it is still framed
+    (the frames covering the NULL tagged ferror='nonfinite_frame'), but
+    it is not an accepted doc, so none of its frames carries doc stats —
+    the left-join miss the in-kernel enrichment must reproduce."""
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    rng = np.random.default_rng(3)
+    bad = rng.integers(-30000, 30000, 4096).tolist()
+    bad[1000] = None  # inside frames 0 (0-2047) and 1 (512-2559)
+    p = str(tmp_path / "seqs.parquet")
+    _write_seqs(p, [("bad", bad), ("ok", rng.integers(-30000, 30000, 4096).tolist())])
+
+    res = analyze_sequences(spark, p, repartition_output=False)
+    rows = res["frame_features"].collect()
+    bad_rows = {r.frame_idx: r for r in rows if r.doc_id == "bad"}
+    assert sorted(bad_rows) == list(range(5))
+    for i, r in bad_rows.items():
+        assert r.ferror == ("nonfinite_frame" if i < 2 else None), i
+        assert r.rms_amplitude is None and r.dynamic_range_db is None, i
+    meta = res["doc_metadata"].filter("doc_id = 'ok'").collect()[0]
+    ok_rows = [r for r in rows if r.doc_id == "ok"]
+    assert len(ok_rows) == 5
+    for r in ok_rows:
+        assert r.ferror is None
+        assert (r.rms_amplitude, r.dynamic_range_db) == (
+            meta.rms_amplitude, meta.dynamic_range_db,
+        )
+    q = {r.doc_id: r.reject_reason for r in res["quarantine"].collect()}
+    assert q == {"bad": "nonfinite"}
+
+
+def test_analyze_sequences_duplicate_doc_id_not_fanned_out(spark, tmp_path):
+    """A doc_id that appears k times emits each input row's own frames
+    once: a join to k doc_meta rows used to emit k^2 x its frames."""
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    rng = np.random.default_rng(5)
+    docs = [
+        ("dup", rng.integers(-30000, 30000, 4096).tolist()),
+        ("dup", rng.integers(-30000, 30000, 3001).tolist()),
+        ("dup", rng.integers(-30000, 30000, 6000).tolist()),
+        ("dup", [0] * 4096),  # low_energy: quarantined, no frames
+        ("ok", rng.integers(-30000, 30000, 2048).tolist()),
+    ]
+    p = str(tmp_path / "seqs.parquet")
+    _write_seqs(p, docs)
+
+    ff = analyze_sequences(spark, p, repartition_output=False)["frame_features"]
+    expected = sum(
+        oracle.n_frames(len(t))
+        for _, t in docs
+        if oracle.reject_reason(np.asarray(t, dtype=np.int32)) is None
+    )
+    assert expected == 5 + 2 + 8 + 1
+    assert ff.count() == expected
+    # each frame carries the stats of the row it came from: one distinct
+    # (rms_amplitude, dynamic_range_db) per accepted input row
+    assert ff.select("rms_amplitude", "dynamic_range_db").distinct().count() == 4
 
 
 def test_fused_null_tokens_row_skipped_not_crashed(spark):

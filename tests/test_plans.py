@@ -78,6 +78,28 @@ def test_flagship_pipeline_single_shuffle_before_sink(spark, tiny_seqs):
     )
 
 
+def test_flagship_frame_path_is_one_token_pass(spark, tiny_seqs):
+    """frame_features decodes each doc ONCE: one scan of the sequences
+    file feeding one Python map (framing, features, quarantine and the
+    J2 doc stats all in the fused kernel) — no doc-profile branch and no
+    broadcast join creeping back in as a second token pass."""
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    path = tiny_seqs.inputFiles()[0]
+    ff = analyze_sequences(spark, path, repartition_output=False)["frame_features"]
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        ff.explain()
+    plan = buf.getvalue()
+    python_nodes = sum(
+        plan.count(n)
+        for n in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+    )
+    assert python_nodes == 1, plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan, plan
+
+
 def test_lsh_candidate_stages_are_single_eval(spark):
     """Regression guard for the single-eval restructure: each LSH
     candidate generator must evaluate its signature UDF EXACTLY once in
