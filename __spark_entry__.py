@@ -65,34 +65,39 @@ GAP = 1800.0  # sessionization gap (seconds)
 MERSENNE = D.MERSENNE
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+# The column that carries each one-row-group driver table's per-row
+# text / vector work. A read that carries it is spread; a read of only
+# the cheap columns stays a plain scan (at sf0.1 on 4 cores, spreading
+# the 26 queries over doc_id/lang/source/n_chars cost them 12 % in sum
+# and bought nothing).
+HEAVY_COLS = {"documents": "text", "embeddings": "embedding"}
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str, *cols: str) -> DataFrame:
+    """Read one input table, projected to `cols` when any are named. A
+    read that carries its table's HEAVY_COLS column and scans as fewer
+    than defaultParallelism partitions (one parquet row group) is spread
+    here, once, so operators never repartition for layout. Pruning and
+    base-column filters pass through the round-robin Repartition into
+    the scan. A read that is already parallel (the 100-TB case) stays a
+    plain scan."""
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if cols:
+        df = df.select(*cols)
+    par = spark.sparkContext.defaultParallelism
+    if HEAVY_COLS.get(name) in df.columns and df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
 
 
 def _docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tokens := per-word char lengths of documents.text (portable).
-
-    r6: conditional `_spread_mat` of the raw (doc_id, text) rows BEFORE
-    the token projection — the driver testdata doc table is one parquet
-    row group, so every `_framed`-derived kernel/token query
-    (frame_rms, kernel_features/full_geometry, spectral_*, rhythm,
-    mfcc_delta, silence_segments, session_tempo, ...) ran its frame
-    explode and Arrow kernel on 1-2 of 32 cores (measured: kernel
-    stages `(1+1)/2` at sf1.0). The lazy-checkpoint form rather than a
-    bare `_spread`: consumers filter on DERIVED token columns (e.g.
-    mfcc_delta's size(toks) frame gate) and Catalyst pushes those
-    filters below a bare spread exchange, re-tokenizing on the single
-    scan partition (caught by the mfcc_delta plan pin). The spread
-    shuffles only the ~6 MB compact doc rows — NOT the exploded
-    token/frame payload (CLAUDE.md rule) — and no-ops when the scan is
-    already parallel (the 100-TB case). Kernel internals untouched
-    (VERDICT #7)."""
-    from audiopro_essentia_spark.operators.dedup import _spread_mat
-
-    return _spread_mat(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"),
-        F.col("doc_id"),
-        T.token_lengths(F.col("text")).alias("toks"),
+    """tokens := per-word char lengths of documents.text (portable),
+    checkpointed: consumers filter on the DERIVED toks column (e.g.
+    mfcc_delta's size(toks) frame gate) and read it in several branches."""
+    return (
+        _t(spark, sf_dir, "documents")
+        .select(F.col("doc_id"), T.token_lengths(F.col("text")).alias("toks"))
+        .localCheckpoint(eager=False)
     )
 
 
@@ -409,7 +414,7 @@ def q_enrich_broadcast(spark, sf_dir):
 def q_salted_agg(spark, sf_dir):
     """Skew: salted two-level aggregation over the hot `source` key — must
     equal a plain GROUP BY exactly."""
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "source", "n_chars")
     out = salted_agg(d, ("source",), n_salts=16, sums=("n_chars",))
     return out.select(
         "source",
@@ -430,7 +435,7 @@ def q_salted_join(spark, sf_dir):
     from audiopro_essentia_spark.functions.sampling import hash_bucket
     from audiopro_essentia_spark.operators.skew import salted_broadcast_join
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = _t(spark, sf_dir, "documents", "doc_id", "source").select(
         "doc_id",
         F.when(hash_bucket(F.col("doc_id")) < 800, F.lit("hot"))
         .otherwise(F.col("source"))
@@ -447,7 +452,7 @@ def q_corpus_rollup(spark, sf_dir):
     """Multi-granularity corpus report: GROUP BY ROLLUP(source, len_class)
     — detail, per-source subtotal, grand total in ONE Expand+agg pass
     (vs 3 separate scans); grouping_id disambiguates levels."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = _t(spark, sf_dir, "documents", "source", "n_chars").select(
         "source",
         "n_chars",
         F.when(F.col("n_chars") < 1000, F.lit("short"))
@@ -467,7 +472,7 @@ def q_corpus_rollup(spark, sf_dir):
 
 def q_topk_per_group(spark, sf_dir):
     """Ranking: top-3 docs by n_chars per lang (deterministic tie-break)."""
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id", "lang", "n_chars")
     w = Window.partitionBy("lang").orderBy(F.desc("n_chars"), F.asc("doc_id"))
     return (
         d.withColumn("rank", F.row_number().over(w))
@@ -569,9 +574,7 @@ def q_normalized_dedup(spark, sf_dir):
     The twin construction uses the same portable ASCII translate as
     normalize_text (upper() itself diverges cross-engine on unicode —
     see normalize_text's docstring)."""
-    # spread: the normalize_text translate/regex projection ran twice on
-    # the single-row-group scan partition (both union branches; r6)
-    d = D._spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     up = d.select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.translate(F.col("text"), T.ASCII_LOWER, T.ASCII_UPPER).alias("text"),
@@ -739,10 +742,7 @@ def q_hashed_embedding(spark, sf_dir):
 
 def q_text_quality(spark, sf_dir):
     """Text: quality metrics + composite score per doc."""
-    # spread: pure projection query on the single-row-group scan (r6)
-    d = D._spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "text")
-    )
+    d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars", "text")
     m = T.quality_metrics(F.col("text"))
     return d.select(
         "doc_id",
@@ -771,7 +771,7 @@ def q_corpus_profile(spark, sf_dir):
     operator's approx_percentile form is the bounded-memory scale path)."""
     from audiopro_essentia_spark.operators.aggregates import corpus_percentiles
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "source", "n_chars")
     return corpus_percentiles(d, "source", "n_chars")
 
 
@@ -847,9 +847,7 @@ def q_quality_classifier(spark, sf_dir):
     deploy)."""
     from audiopro_essentia_spark.functions.text import quality_classifier_score
 
-    # spread: the hashed-BoW scoring projection is the whole query and
-    # ran on the single-row-group scan partition (r6; no-op at scale)
-    d = D._spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         quality_classifier_score(F.col("text")).alias("clf_score"),
@@ -977,7 +975,7 @@ def q_drift_psi(spark, sf_dir):
         source_drift_psi,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "source", "n_chars")
     return source_drift_psi(d, value_col="n_chars", group_col="source")
 
 
@@ -992,10 +990,7 @@ def q_hll_distinct(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     ws = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    # spread first: the bigram explode + register build is the corpus
-    # pass and ran on the single-row-group scan partition (r6; no-op at
-    # scale)
-    base = D._spread(d.select("source", ws.alias("_ws")))
+    base = d.select("source", ws.alias("_ws"))
     n1 = F.greatest(F.size("_ws") - 1, F.lit(0))
     bg = base.select(
         "source",
@@ -1038,11 +1033,7 @@ def q_cms_freq(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     ws = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    # spread first: the token explode feeds BOTH the register build and
-    # the exact-count branch, and ran on the single-row-group scan
-    # partition (~10 s of the 12.5 s sf1.0 run on one task; r6, no-op at
-    # scale)
-    tok = D._spread(d.select("source", "text")).select(
+    tok = d.select(
         F.coalesce(F.col("source").cast("string"), F.lit("__null__")).alias(
             "source"
         ),
@@ -1108,7 +1099,7 @@ def q_temperature_sample(spark, sf_dir):
     (functions/sampling.py temperature_sample)."""
     from audiopro_essentia_spark.functions.sampling import temperature_sample
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id", "source", "n_chars")
     out = temperature_sample(d, tau=0.5)
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"), "source",
@@ -1124,7 +1115,7 @@ def q_cap_per_group(spark, sf_dir):
     QUALIFY."""
     from audiopro_essentia_spark.operators.skew import capped_top_n
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id", "source", "n_chars")
     out = capped_top_n(d, n=5, group_col="source", order_col="n_chars")
     return out.select(
         "source", "doc_id", "n_chars", F.col("rank").cast("int").alias("rank")
@@ -1205,9 +1196,7 @@ def q_c4_clean(spark, sf_dir):
         synthesize_lines,
     )
 
-    # spread BEFORE the line synthesis (md5-per-sentence) — it ran on
-    # the single-row-group scan partition (r6; no-op at scale)
-    d = D._spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     lined = synthesize_lines(F.col("text"))
     text2 = (
         F.when(
@@ -1253,7 +1242,7 @@ def q_epoch_shuffle(spark, sf_dir):
     single-partition window (operators/shuffle.py epoch_shuffle)."""
     from audiopro_essentia_spark.operators.shuffle import epoch_shuffle
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id")
     return epoch_shuffle(d, id_col="doc_id", seed="epoch0", n_buckets=64)
 
 
@@ -1265,7 +1254,7 @@ def q_padding_waste(spark, sf_dir):
     (operators/aggregates.py padding_waste)."""
     from audiopro_essentia_spark.operators.aggregates import padding_waste
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "source", "n_chars")
     return padding_waste(d, count_col="n_chars", context_len=256)
 
 
@@ -1348,9 +1337,7 @@ def q_pii_redact(spark, sf_dir):
     check is vacuous. Narrow JVM regexp map, zero shuffle."""
     from audiopro_essentia_spark.functions import pii as P
 
-    # spread: the regex redaction projection is the whole query and ran
-    # on the single-row-group scan partition (r6; no-op at scale)
-    d = D._spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     injected = F.concat(
         F.col("text"),
         F.when(
@@ -1691,7 +1678,7 @@ def q_hash_split(spark, sf_dir):
     — reproducible across engines/reruns, exact DuckDB twin."""
     from audiopro_essentia_spark.functions.sampling import hash_split
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id")
     out = hash_split(d, {"train": 0.8, "val": 0.1, "test": 0.1})
     return out.select("doc_id", "split")
 
@@ -1704,7 +1691,7 @@ def q_mixture_sample(spark, sf_dir):
     narrow filter."""
     from audiopro_essentia_spark.functions.sampling import mixture_sample
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id", "source")
     out = mixture_sample(
         d, {"src0": 1.0, "src1": 0.3}, default_rate=0.5
     )
@@ -1721,7 +1708,7 @@ def q_token_budget(spark, sf_dir):
     total-then-hash-filter (functions/sampling.py token_budget_sample)."""
     from audiopro_essentia_spark.functions.sampling import token_budget_sample
 
-    d = _t(spark, sf_dir, "documents")
+    d = _t(spark, sf_dir, "documents", "doc_id", "source", "n_chars")
     out = token_budget_sample(d, {"src0": 2000, "src1": 4000})
     return out.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -1822,10 +1809,7 @@ def q_staged_gopher(spark, sf_dir):
         synthesize_lines,
     )
 
-    # spread BEFORE the rule-exercising text synthesis: the md5-based
-    # line/bullet rewrite is the expensive projection and ran on the
-    # single-row-group scan partition (r6; no-op at scale)
-    d = D._spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     lined = F.concat(
         synthesize_lines(F.col("text")), F.lit("\nthe and that have with")
     )
@@ -1927,11 +1911,7 @@ def q_staged_bloom(spark, sf_dir):
         "int"
     )
     flags = (
-        # spread first: the shingle explode + map-side flag aggregate is
-        # the corpus pass and ran on the single-row-group scan partition
-        # (16.5 s of the 17.3 s sf1.0 run on one task; r6, no-op at scale)
-        D._spread(d.select("source", "text"))
-        .select(
+        d.select(
             F.when(parity % 2 == 0, 1).otherwise(0).alias("is_build"),
             F.explode(word_ngrams(F.col("text"), n=3)).alias("shingle"),
         )
@@ -2172,9 +2152,8 @@ def q_staged_priority_sample(spark, sf_dir):
     its statistically honest replacement)."""
     from audiopro_essentia_spark.functions.sampling import priority_sample
 
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "doc_id", F.col("doc_id").cast("long")
-    )
+    d = _t(spark, sf_dir, "documents", "doc_id", "source", "n_chars")
+    d = d.withColumn("doc_id", F.col("doc_id").cast("long"))
     return priority_sample(d, k=20)
 
 
@@ -2193,11 +2172,7 @@ def q_staged_line_scrub(spark, sf_dir):
     from audiopro_essentia_spark.functions.cleaning import synthesize_lines
     from audiopro_essentia_spark.operators.dedup import line_scrub
 
-    # spread BEFORE the line synthesis (md5-per-sentence) — it ran on
-    # the single-row-group scan partition (r6; no-op at scale)
-    d = D._spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    )
+    d = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     lined = F.concat(
         synthesize_lines(F.col("text")),
         F.lit("\n=== subscribe to "),
@@ -2273,13 +2248,8 @@ def q_staged_cdc(spark, sf_dir):
     Muthitacharoen et al. SOSP 2001)."""
     from audiopro_essentia_spark.operators.dedup import cdc_chunks
 
-    # spread once at the top: BOTH cdc passes and the perturbed-twin
-    # text build hang off this frame (the twin build otherwise ran on
-    # the single-row-group scan partition; r6, no-op at scale)
-    d = D._spread(
-        _t(spark, sf_dir, "documents").select(
-            F.col("doc_id").cast("long").alias("doc_id"), "text"
-        )
+    d = _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     pw = F.filter(
         F.split(F.coalesce(F.col("text"), F.lit("")), " "),
@@ -2771,7 +2741,7 @@ def q_staged_neg(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id")
         .where(F.col("doc_id").isNotNull())
         .select(F.col("doc_id").cast("long").alias("doc_id"))
     )
@@ -2999,7 +2969,7 @@ def q_staged_fs(spark, sf_dir):
     from audiopro_essentia_spark.operators.linkage import fs_link_scores
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id", "lang", "source", "n_chars")
         .where(F.col("doc_id").isNotNull() & F.col("n_chars").isNotNull())
         .select(
             F.col("doc_id").cast("long").alias("id"),
@@ -3097,7 +3067,7 @@ def q_staged_golden(spark, sf_dir):
     from audiopro_essentia_spark.operators.linkage import golden_records
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id", "lang", "source", "n_chars")
         .where(
             F.col("doc_id").isNotNull()
             & F.col("lang").isNotNull()
@@ -3185,7 +3155,7 @@ def q_staged_dp(spark, sf_dir):
     from audiopro_essentia_spark.operators.checks import dp_counts
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "lang", "source")
         .where(F.col("source").isNotNull() & F.col("lang").isNotNull())
         .select(F.col("source").alias("src"), F.col("lang").alias("lng"))
     )
@@ -3814,7 +3784,7 @@ def q_staged_target_enc(spark, sf_dir):
     from audiopro_essentia_spark.operators.encoding import target_encode
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "lang", "source", "n_chars")
         .where(
             F.col("source").isNotNull()
             & F.col("lang").isNotNull()
@@ -3844,7 +3814,7 @@ def q_staged_target_enc_loo(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id", "source", "n_chars")
         .where(
             F.col("source").isNotNull()
             & F.col("doc_id").isNotNull()
@@ -3877,7 +3847,7 @@ def q_staged_mi(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "lang", "n_chars")
         .where(F.col("n_chars").isNotNull() & F.col("lang").isNotNull())
         .select(
             "lang",
@@ -3903,15 +3873,9 @@ def q_staged_bleu(spark, sf_dir):
     from audiopro_essentia_spark.operators.evalmetrics import bleu_eval
 
     ws = nonempty_words(F.col("text"), null_as_empty=True)
-    # spread the raw rows BEFORE the 80%-prefix candidate build: the
-    # slice/concat_ws projection is token-heavy and would otherwise run
-    # on the single-row-group scan partition (r6; no-op at scale)
     d = (
-        D._spread(
-            _t(spark, sf_dir, "documents").where(
-                F.col("source").isNotNull() & F.col("doc_id").isNotNull()
-            )
-        )
+        _t(spark, sf_dir, "documents")
+        .where(F.col("source").isNotNull() & F.col("doc_id").isNotNull())
         .select(
             F.col("source").alias("src"),
             F.col("doc_id").cast("string").alias("rid"),
@@ -4005,7 +3969,7 @@ def q_staged_kripp(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id", "lang", "source")
         .where(
             F.col("doc_id").isNotNull()
             & F.col("lang").isNotNull()
@@ -4110,7 +4074,7 @@ def q_staged_fleiss(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id", "lang", "source")
         .where(
             F.col("doc_id").isNotNull()
             & F.col("lang").isNotNull()
@@ -4175,7 +4139,7 @@ def q_staged_pref(spark, sf_dir):
     )
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "doc_id")
         .where(F.col("doc_id").isNotNull())
         .select(
             F.concat(F.lit("m"), (F.col("doc_id") % 4).cast("string"))
@@ -4278,7 +4242,7 @@ def q_staged_chi2(spark, sf_dir):
     from audiopro_essentia_spark.operators.evalmetrics import chi2_assoc
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "lang", "source", "n_chars")
         .where(
             F.col("n_chars").isNotNull()
             & F.col("lang").isNotNull()
@@ -4419,7 +4383,7 @@ def q_staged_bh(spark, sf_dir):
     from audiopro_essentia_spark.operators.evalmetrics import bh_fdr
 
     d = (
-        _t(spark, sf_dir, "documents")
+        _t(spark, sf_dir, "documents", "lang", "source")
         .where(F.col("source").isNotNull() & F.col("lang").isNotNull())
         .select("source", "lang")
         .distinct()

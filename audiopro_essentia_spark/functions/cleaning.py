@@ -111,15 +111,7 @@ def gopher_quality(
     exact-BIGINT division and every rule compares the ROUNDED value, so
     the DuckDB twin reproduces both the doubles and the booleans
     bit-for-bit."""
-    from ..operators.dedup import _spread
-
-    # _spread (r6): the projection is the whole operator and ran on the
-    # scan's partitioning — ONE task for 8.0 s of the 8.4 s sf1.0 run on
-    # the single-row-group doc table. The conditional spread exchange is
-    # a local-artifact fix only: it no-ops when the scan is already
-    # parallel (the 100-TB case), so the zero-shuffle scale shape above
-    # still holds where it matters.
-    df = _spread(df.select(F.col(id_col), F.col(text_col)))
+    df = df.select(F.col(id_col), F.col(text_col))
     t = F.coalesce(F.col(text_col), F.lit(""))
     ws = nonempty_words(F.col(text_col), null_as_empty=True)
     n_words = F.size(ws).cast("long")
@@ -221,12 +213,7 @@ def c4_clean(
     """(id, n_lines, n_kept_lines, keep, clean_text): C4 line filtering +
     document gates. `clean_text` is the surviving lines re-joined with
     newlines ('' when none survive); `keep` is the document-level verdict."""
-    from ..operators.dedup import _spread
-
-    # _spread (r6): the line-filter projection ran on the scan's single
-    # partition (4.2 s of the 4.4 s sf1.0 run on one task); no-op when
-    # the scan is already parallel.
-    df = _spread(df.select(F.col(id_col), F.col(text_col)))
+    df = df.select(F.col(id_col), F.col(text_col))
     text = F.coalesce(F.col(text_col), F.lit(""))
     lines = F.split(text, "\n")
     kept = F.filter(lines, lambda l: c4_line_keep(l, min_words_per_line))

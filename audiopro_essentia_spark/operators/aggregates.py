@@ -512,12 +512,8 @@ def _lex_divergence_pq(
     tables (without the checkpoints every downstream consumer re-ran
     the whole scan+explode subtree — 16 corpus passes measured)."""
     g = F.coalesce(F.col(group_col).cast("string"), F.lit("__null__"))
-    from .dedup import _spread
-
-    # _spread (r6): the token explode feeds two aggregate branches and
-    # ran on the single-row-group scan partition; no-op at scale.
-    tok = _spread(df.select(g.alias("grp"), F.col(text_col))).select(
-        "grp",
+    tok = df.select(
+        g.alias("grp"),
         F.explode(F.split(F.col(text_col), " ")).alias("word"),
     ).where(F.col("word") != "")
     head = (

@@ -32,37 +32,6 @@ from ..functions.text import portable_hash32, portable_hash32_hi, word_ngrams
 MERSENNE = 2_147_483_647  # 2^31 - 1
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Small doc tables often scan as ONE partition (single tiny parquet
-    file) which serializes the CPU-heavy shingle/hash stages; spread them.
-    (Unlike the token payload, shuffling a doc-text table is cheap.)"""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
-
-
-def _spread_mat(df: DataFrame, *exprs: Column) -> DataFrame:
-    """_spread, then project `exprs`, then LAZY localCheckpoint: spread
-    the small doc table, run the heavy projection ABOVE the spread
-    exchange, and cut lineage. Two measured failure modes of plain
-    _spread motivate the checkpoint (r6, sf1.0 profiling):
-    (a) Catalyst pushes a filter on a heavy DERIVED column (e.g.
-    size(word_ngrams(text)) > 0) below the spread exchange, re-inlining
-    the whole shingle build into the single-partition scan stage — the
-    14-17 s single-task stages simhash/containment/allpairs paid despite
-    _spread; (b) a multi-branch consumer re-runs the scan-side subtree
-    per branch. Checkpointing the spread projection materializes the
-    built columns once across defaultParallelism partitions; downstream
-    filters/branches read the materialized rows. eager=False: each new
-    plan builds and materializes its own checkpoint inside its own
-    execution, so every bench/oracle invocation still computes from the
-    parquet inputs (no cross-run state). Pass a pre-projected `df`
-    (cheap columns only) so the shuffle carries just what the exprs
-    need."""
-    return _spread(df).select(*exprs).localCheckpoint(eager=False)
-
-
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -188,7 +157,7 @@ def minhash_band_signatures(
     re-signing 100 TB per increment. One nondeterministic-marked Arrow UDF
     pass (see minhash_lsh_candidates for why)."""
     udf = make_minhash_band_udf(k, bands).asNondeterministic()
-    return _spread(df).select(
+    return df.select(
         F.col(id_col),
         udf(word_ngrams(F.col(text_col), ngram)).alias("bsigs"),
     ).select(id_col, F.posexplode("bsigs").alias("band", "bsig"))
@@ -329,8 +298,8 @@ def minhash_lsh_candidates(
     collide in >=1 LSH band.
 
     Scale shape: ONE Arrow UDF pass over the corpus (the UDF is marked
-    nondeterministic so Catalyst neither duplicates it below the spread
-    exchange via inferred-filter pushdown nor re-evaluates it on a
+    nondeterministic so Catalyst neither duplicates it into the scan
+    via inferred-filter pushdown nor re-evaluates it on a
     self-join build side — measured 4 ArrowEvalPython nodes collapsing to
     1), then ONE shuffle into (band, signature) buckets, then in-bucket
     pair generation (star-capped past `max_bucket`, see _bucket_pairs).
@@ -416,7 +385,7 @@ def ngram_jaccard_pairs(
     where the all-pairs OUTPUT is itself quadratic. Large groups of
     near-but-not-byte-identical docs remain approximate under the cap:
     collapse exact dups first (exact_dedup) or raise max_df."""
-    sh = _spread(df).select(
+    sh = df.select(
         F.col(id_col), word_ngrams(F.col(text_col), ngram).alias("shingles")
     ).filter(F.size("shingles") > 0)
     cand = _jaccard_candidate_pairs(sh, id_col, max_df)
@@ -555,17 +524,14 @@ def simhash_neardup_pairs(
             f"max_hamming must be < 4 (4 x 16-bit chunk pigeonhole); "
             f"got {max_hamming}"
         )
-    # _spread_mat (not _spread): the size filter below used to push BELOW
-    # the spread exchange, re-inlining the whole word_ngrams build into
-    # the single-partition scan stage (measured 14.4 s of a 17.7 s sf1.0
-    # run on ONE task); the checkpoint materializes the shingle arrays
-    # once across the spread partitions and the filter/UDF read them.
+    # checkpointed so the size filter below reads the materialized
+    # shingle arrays instead of being pushed into the scan with the
+    # whole word_ngrams build
     sig = (
-        _spread_mat(
-            df.select(F.col(id_col), F.col(text_col)),
-            F.col(id_col),
-            word_ngrams(F.col(text_col), ngram).alias("_sh"),
+        df.select(
+            F.col(id_col), word_ngrams(F.col(text_col), ngram).alias("_sh")
         )
+        .localCheckpoint(eager=False)
         .filter(F.size("_sh") > 0)  # empty docs carry no near-dup signal
         .select(
             F.col(id_col),
@@ -713,8 +679,7 @@ def embedding_neardup_pairs(
 
     udf = make_lsh_band_udf(n_planes, band_bits, seed).asNondeterministic()
     banded = (
-        _spread(df)
-        .select(
+        df.select(
             F.col(id_col),
             F.col(vec_col).alias("_v"),
             norm_expr(F.col(vec_col)).alias("_n"),
@@ -810,15 +775,9 @@ def source_ngram_overlap(
     join closes the matrix. The corpus is never self-joined; shingles
     use the same word_ngrams/_shingle twin convention as MinHash."""
     g = F.coalesce(F.col(group_col).cast("string"), F.lit("__null__"))
-    # _spread: the explode + map-side collect_set ran on the scan's
-    # partitioning (ONE task for 14.5 s of the 24.3 s sf1.0 run on the
-    # single-row-group doc table); spreading the raw (grp, text) rows
-    # first parallelizes the shingle build. No-op when the scan is
-    # already parallel (the 100-TB case).
     gs = (
-        _spread(df.select(g.alias("grp"), F.col(text_col)))
-        .select(
-            "grp",
+        df.select(
+            g.alias("grp"),
             F.explode(word_ngrams(F.col(text_col), ngram)).alias("gram"),
         )
         .groupBy("gram")
@@ -913,11 +872,8 @@ def duplicate_span_stats(
     n_spans = (F.size(ws) / span_words).cast("int")
     # guard BEFORE the explode: sequence(0, -1) would generate a DESCENDING
     # range, not an empty one — docs shorter than one span yield no rows
-    # _spread (r6): the span explode + per-span md5 ran on the
-    # single-row-group scan partition; no-op when already parallel
     spans = (
-        _spread(df.select(F.col(id_col), F.col(text_col)))
-        .select(F.col(id_col), ws.alias("_ws"), n_spans.alias("_n"))
+        df.select(F.col(id_col), ws.alias("_ws"), n_spans.alias("_n"))
         .where(F.col("_n") >= 1)
         .select(
             F.col(id_col),
@@ -1140,13 +1096,10 @@ def span_scrub(
     per-partition sort is the SMJ sort it replaces."""
     ws = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
                   lambda w: w != "")
-    # _spread_mat: the one-pass md5 span explode ran on the scan's single
-    # partition (12.8 s of the 15.6 s sf1.0 run on one task); the word
-    # arrays are also consumed twice (occurrence build + mask join-back).
-    base = _spread_mat(
-        df.select(F.col(id_col), F.col(text_col)),
-        F.col(id_col),
-        ws.alias("_ws"),
+    # the word arrays are consumed twice (occurrence build + mask
+    # join-back): materialize them once
+    base = df.select(F.col(id_col), ws.alias("_ws")).localCheckpoint(
+        eager=False
     )
     span_txt = lambda i: F.concat_ws(" ", F.slice(F.col("_ws"), i, n))
     # ONE md5 hex per span inside the transform lambda; the two 32-bit
@@ -1259,14 +1212,10 @@ def line_scrub(
     if min_doc_freq < 2:
         raise ValueError(f"min_doc_freq must be >= 2, got {min_doc_freq}")
     lines_arr = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    # _spread_mat: the posexplode + per-line md5 map side ran on the
-    # scan's single partition (9.8 s of the 16.2 s sf1.0 run on one
-    # task), and the line arrays are consumed twice (occurrence build +
-    # reassembly join-back).
-    base = _spread_mat(
-        df.select(F.col(id_col), F.col(text_col)),
-        F.col(id_col),
-        lines_arr.alias("_ls"),
+    # the line arrays are consumed twice (occurrence build + reassembly
+    # join-back): materialize them once
+    base = df.select(F.col(id_col), lines_arr.alias("_ls")).localCheckpoint(
+        eager=False
     )
     occ = base.select(
         F.col(id_col),
@@ -1378,22 +1327,13 @@ def cdc_chunks(
         F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
         lambda x: x != "",
     )
-    # _spread_mat: the md5-per-boundary-candidate projection is the
-    # whole cost of this operator and ran on the scan's single partition
-    # (14.6 s of the 15.8 s sf1.0 run on one task). Plain _spread was
-    # not enough: Catalyst pushed the derived `size(_ws) >= 1` filter
-    # BELOW the spread exchange, re-running the word split on the
-    # single-partition scan stage (2.3 s med=max single-task codegen in
-    # the r6 wave-5 profile) — the checkpoint materializes the split
-    # once across the spread partitions. Still the ONE exchange in the
-    # plan, carrying only (id, words); no-op when the scan is already
-    # parallel — the per-doc chunking itself stays embarrassingly
-    # position-parallel as documented.
-    base = _spread_mat(
-        df.select(F.col(id_col), F.col(text_col)),
-        F.col(id_col),
-        ws.alias("_ws"),
-    ).where(F.size("_ws") >= 1)
+    # checkpointed so the derived `size(_ws) >= 1` filter reads the
+    # materialized split instead of being pushed into the scan with it
+    base = (
+        df.select(F.col(id_col), ws.alias("_ws"))
+        .localCheckpoint(eager=False)
+        .where(F.size("_ws") >= 1)
+    )
     n = F.size("_ws")
     # boundary candidates live in [w, n-1] (a chunk always runs to the
     # last word; no shingle ends before w). sequence() DESCENDS when
@@ -1510,18 +1450,14 @@ def allpairs_jaccard_pairs(
         )
     if ngram < 1:
         raise ValueError(f"ngram must be >= 1, got {ngram}")
-    # _spread_mat: the shingle build is materialized ONCE above the
-    # spread exchange — it feeds FIVE plan branches (dfreq, ranked, and
-    # the two verify sides below), each of which used to re-run the
-    # whole build, and the size filter used to push the build below the
-    # exchange onto the single-partition scan (two 15-16 s single-task
-    # stages of the 27.9 s sf1.0 run).
+    # the shingle build is materialized ONCE: it feeds FIVE plan
+    # branches (dfreq, ranked, and the two verify sides below), each of
+    # which would otherwise re-run it
     sh = (
-        _spread_mat(
-            df.select(F.col(id_col), F.col(text_col)),
-            F.col(id_col),
-            word_ngrams(F.col(text_col), ngram).alias("shingles"),
+        df.select(
+            F.col(id_col), word_ngrams(F.col(text_col), ngram).alias("shingles")
         )
+        .localCheckpoint(eager=False)
         .filter(F.size("shingles") > 0)
         .withColumn("_n", F.size("shingles").cast("long"))
     )
@@ -1809,16 +1745,13 @@ def containment_pairs(
         )
     if ngram < 1:
         raise ValueError(f"ngram must be >= 1, got {ngram}")
-    # _spread_mat: shingle build materialized once above the spread
-    # exchange (five consumers; the size filter used to re-inline the
-    # build below the exchange — two 15-16 s single-task stages of the
-    # 39.4 s sf1.0 run). Same shape as allpairs_jaccard_pairs.
+    # shingle build materialized once (five consumers); same shape as
+    # allpairs_jaccard_pairs
     sh = (
-        _spread_mat(
-            df.select(F.col(id_col), F.col(text_col)),
-            F.col(id_col),
-            word_ngrams(F.col(text_col), ngram).alias("shingles"),
+        df.select(
+            F.col(id_col), word_ngrams(F.col(text_col), ngram).alias("shingles")
         )
+        .localCheckpoint(eager=False)
         .filter(F.size("shingles") > 0)
         .withColumn("_n", F.size("shingles").cast("long"))
     )

@@ -1428,15 +1428,7 @@ def bleu_eval(
         ).otherwise(c0.cast(t) if as_str else c0)
         return out
 
-    # _spread (r6): the gram work ran on the doc scan's partitioning
-    # (two sequential single-task stages of 25-31 s each in the 50.5 s
-    # sf1.0 round-start run); spreading the pair rows parallelizes it.
-    # No-op when the scan is already parallel (the 100-TB case).
-    from .dedup import _spread
-
-    rows = _spread(
-        df.select(*g, F.col(id_col), F.col(cand_col), F.col(ref_col))
-    ).select(
+    rows = df.select(
         *g,
         val(id_col, as_str=True).alias("_id"),
         nonempty_words(val(cand_col)).alias("_wc"),
@@ -1585,16 +1577,11 @@ def rouge_n(
             F.raise_error(F.lit(f"rouge_n: NULL {col}")).cast(t),
         ).otherwise(c0.cast(t) if as_str else c0)
 
-    # same r6 shape as bleu_eval: spread the raw pair rows, compute the
-    # per-pair clip in ONE mapInArrow batch pass (_pair_clip_arrow —
-    # zero gram shuffle; the former two gram-count aggregates + their
-    # equi-join are gone), fold everything in one bounded per-group
-    # aggregate.
-    from .dedup import _spread
-
-    rows = _spread(
-        df.select(*g, F.col(id_col), F.col(cand_col), F.col(ref_col))
-    ).select(
+    # same shape as bleu_eval: compute the per-pair clip in ONE
+    # mapInArrow batch pass (_pair_clip_arrow — zero gram shuffle; the
+    # former two gram-count aggregates + their equi-join are gone), fold
+    # everything in one bounded per-group aggregate.
+    rows = df.select(
         *g,
         val(id_col, as_str=True).alias("_id"),
         nonempty_words(val(cand_col)).alias("_wc"),

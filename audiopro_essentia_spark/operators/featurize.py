@@ -34,15 +34,10 @@ def hashed_doc_embedding(
     as the ZERO vector (coverage-preserving; zero-norm vectors never
     qualify in the downstream pair ops by the pinned contract) instead
     of silently vanishing from the corpus fed to ANN / semantic dedup."""
-    from .dedup import _spread
-
     ws = F.filter(
         words(F.coalesce(F.col(text_col), F.lit(""))), lambda w: w != ""
     )
-    # _spread (r6): the token explode + per-word portable md5 ran on the
-    # scan's single partition (~3 s twice of the 6.0 s sf1.0 run —
-    # the doc spine re-read pays it again); no-op when already parallel.
-    df = _spread(df.select(F.col(id_col), F.col(text_col)))
+    df = df.select(F.col(id_col), F.col(text_col))
     tok = df.select(F.col(id_col), F.explode(ws).alias("_w"))
     slot = tok.select(
         id_col, F.pmod(portable_hash32(F.col("_w")), F.lit(dim)).alias("_i")

@@ -139,12 +139,8 @@ def textrank_word_graph(
     into the vocab-bounded (src, dst) count exchange."""
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    from .dedup import _spread
-
     cw = nonempty_words(F.col(text_col), null_as_empty=True)
-    # _spread (r6): the bigram explode (both directions) ran on the
-    # scan's single partition; no-op when already parallel.
-    base = _spread(df.select(F.col(text_col))).select(cw.alias("_ws"))
+    base = df.select(cw.alias("_ws"))
     nb = F.greatest(F.size("_ws") - 1, F.lit(0))
     bg = base.select(
         F.explode(

@@ -40,15 +40,7 @@ def repetition_profile(
     """(id, n_words, dup_word_frac, dup_ngram_frac, top_ngram_char_frac)."""
     text = F.col(text_col)
     ws = words(text)
-    # _spread (r6): both the gram explode and the scalar word stats ran
-    # on the scan's partitioning — ONE task for ~17 s of the 18.8 s
-    # sf1.0 run on the single-row-group doc table. Spreading the raw
-    # (id, text) rows parallelizes both branches (the two branches share
-    # the spread exchange via ReusedExchange); no-op when the scan is
-    # already parallel (the 100-TB case).
-    from .dedup import _spread
-
-    df = _spread(df.select(F.col(id_col), text.alias(text_col)))
+    df = df.select(F.col(id_col), text.alias(text_col))
     # grams are materialized ONCE, in the explode path; total / distinct
     # gram counts fall out of the (doc, gram) count aggregate for free
     # (sum(c) and count(*)), so the expensive gram construction never runs

@@ -115,17 +115,10 @@ def dsir_importance(
     Docs with zero features (empty/whitespace text) keep weight 0 via
     the left join + coalesce — they are never silently dropped.
     """
-    from .dedup import _spread
-
-    # r6: (a) _spread — the two feature explodes + md5 bucket hashing
-    # ran on the scan's partitioning (four 3-7.5 s single-task stages of
-    # the 13.9 s sf1.0 run); no-op when the scan is already parallel.
-    # (b) the class tag rides each feature row inline (carry=) instead
-    # of being joined back on id — same tag values (is_target is a
-    # per-row expression of df's columns), one join fewer.
-    base = _spread(
-        df.select(F.col(id_col), F.col(text_col), is_target.alias("_is_tgt"))
-    )
+    # the class tag rides each feature row inline (carry=) instead of
+    # being joined back on id — same tag values (is_target is a per-row
+    # expression of df's columns), one join fewer.
+    base = df.select(F.col(id_col), F.col(text_col), is_target.alias("_is_tgt"))
     feats = _doc_features(
         base, text_col, id_col, carry=("_is_tgt",)
     ).withColumn("_b", dsir_bucket(F.col("feat"), n_buckets))
@@ -217,14 +210,8 @@ def bm25_topk(
     probe); the final per-query top-k runs through the two-phase salted
     window so a hot query never serializes on one reducer.
     """
-    from .dedup import _spread
-
     ws = nonempty_words(F.col(text_col))
-    # _spread (r6): the token explode + broadcast probe + map-side tf
-    # aggregate ran on the scan's partitioning — ONE task for 20.2 s of
-    # the 21 s sf1.0 run on the single-row-group doc table. No-op when
-    # the scan is already parallel (the 100-TB case).
-    toks = _spread(docs.select(F.col(id_col), F.col(text_col))).select(
+    toks = docs.select(
         F.col(id_col), F.size(ws).alias("_dl"), F.explode(ws).alias("term")
     )
     qterms = queries.select(

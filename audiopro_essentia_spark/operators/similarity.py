@@ -266,18 +266,12 @@ def brute_force_topk(
     inner loop over the broadcast rows), so the per-pair expression pays
     only the dot — the inline form re-folded both dim-d norms per pair,
     tripling the flops of the scan."""
-    from .dedup import _spread
-
     q = queries.select(
         F.col(query_id),
         F.col(query_vec).alias("_qv"),
         norm_expr(F.col(query_vec)).alias("_qn"),
     )
-    # _spread (r6): the corpus-side cosine scan (the whole cost of a
-    # brute-force pass) ran on the scan's partitioning — ONE task for
-    # 18.2 s of rrf_hybrid's 21.6 s sf1.0 run when the corpus came from
-    # a single-row-group table. No-op when the scan is already parallel.
-    c = _spread(corpus.select(F.col(corpus_id), F.col(corpus_vec))).select(
+    c = corpus.select(
         F.col(corpus_id),
         F.col(corpus_vec).alias("_cv"),
         norm_expr(F.col(corpus_vec)).alias("_cn"),
@@ -733,12 +727,6 @@ def ivf_assign(
     column would otherwise surface as a raw numpy AxisError from the
     centroid normalization deep inside the assign UDF (found by the
     empty-input sweep, tools_empty_sweep.py)."""
-    from .dedup import _spread
-
-    # _spread (r6): the md5 sample pass and the Arrow assignment pass
-    # (and every downstream probe of the assigned frame) run at the
-    # corpus scan's parallelism; no-op when already parallel.
-    corpus = _spread(corpus)
     sample = _md5_sample(corpus, corpus_vec, n_centroids, distinct=False)
     if sample.shape[0] == 0:
         raise ValueError(
@@ -855,13 +843,6 @@ def kmeans_lite(
     corpus has fewer than k distinct vectors.
 
     Returns (corpus + cluster_id, final centroids ndarray)."""
-    from .dedup import _spread
-
-    # _spread (r6): every pass below (md5 sample, per-iteration Arrow
-    # assignment + posexplode stats, final assignment) runs at the
-    # corpus scan's parallelism — 1-2 tasks when the vectors come from
-    # a single-row-group table. No-op when already parallel.
-    corpus = _spread(corpus)
     C = _md5_sample(corpus, vec_col, k, distinct=True)
     if C.ndim != 2 or C.shape[0] < k:
         found = 0 if C.ndim != 2 else C.shape[0]

@@ -28,14 +28,10 @@ def tfidf_top_terms(
     k: int = 5,
 ) -> DataFrame:
     """(id, term, rank, score): the k highest-tf-idf terms per document."""
-    from .dedup import _spread
-
     # drop empty-string tokens (consecutive/leading/trailing spaces):
     # '' would otherwise get a df count and — sorting before every real
     # term — could claim a top-k slot on ties.
-    # _spread (r6): the token explode + map-side tf aggregate ran on the
-    # single-row-group scan partition; no-op when already parallel.
-    tokens = _spread(df.select(F.col(id_col), F.col(text_col))).select(
+    tokens = df.select(
         F.col(id_col), F.explode(words(F.col(text_col))).alias("term")
     ).where(F.col("term") != "")
     tf = tokens.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("_tf"))
@@ -102,17 +98,11 @@ def bigram_surprisal(
     3.414413 vs DuckDB 3.414414; caught by the r5 sf0.1 full-surface
     sweep, pinned by test). round() at scale 0 ties AWAY FROM ZERO in
     both engines — the CLAUDE.md SAMPLE_KEY recipe."""
-    from .dedup import _spread_mat
-
     cw = nonempty_words(F.col(text_col))
-    # _spread_mat (r6): the word arrays feed THREE consumers (bigram
-    # explode, unigram explode, and the per-doc score join-back), each
-    # of which re-ran the split on the single-row-group scan partition;
-    # materialize them once across the spread partitions.
-    base = _spread_mat(
-        df.select(F.col(id_col), F.col(text_col)),
-        F.col(id_col),
-        cw.alias("_ws"),
+    # the word arrays feed THREE consumers (bigram explode, unigram
+    # explode, and the per-doc score join-back): materialize them once
+    base = df.select(F.col(id_col), cw.alias("_ws")).localCheckpoint(
+        eager=False
     )
     n1 = F.greatest(F.size("_ws") - 1, F.lit(0))
     bg = base.select(
@@ -285,17 +275,11 @@ def npmi_collocations(
         raise ValueError(f"min_count must be >= 1, got {min_count}")
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
-    from .dedup import _spread_mat
-
     cw = nonempty_words(F.col(text_col))
-    # _spread_mat (r6): the word arrays feed three consumers (bigram
-    # explode, unigram explode, narrow totals aggregate) on the
-    # single-row-group scan partition; materialize them once across the
-    # spread partitions (4.1 s single-task of the 6.8 s sf1.0 run).
-    base = _spread_mat(
-        df.select(F.col(id_col), F.col(text_col)),
-        F.col(id_col),
-        cw.alias("_ws"),
+    # the word arrays feed three consumers (bigram explode, unigram
+    # explode, narrow totals aggregate): materialize them once
+    base = df.select(F.col(id_col), cw.alias("_ws")).localCheckpoint(
+        eager=False
     )
     nb = F.greatest(F.size("_ws") - 1, F.lit(0))
     bg = base.select(

@@ -36,13 +36,8 @@ def build_vocab(
     """Frequency-ranked vocabulary: (word, id, cnt), id 1..V by
     (count desc, word asc) — the deterministic tie-break keeps ids stable
     across runs and engines. id 0 is reserved for <unk>."""
-    from .dedup import _spread
-
-    # _spread (r6): the token explode + map-side count ran on the
-    # single-row-group scan partition; no-op when already parallel.
     counts = (
-        _spread(df.select(F.col(text_col)))
-        .select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -96,14 +91,7 @@ def encode_documents(
     # row, so coverage survives the single broadcast join (no second
     # spine join that would plan as a SortMergeJoin); collect_list skips
     # the NULL struct, leaving ids = [] for that doc.
-    from .dedup import _spread
-
-    # _spread (r6): the posexplode + broadcast vocab join + per-doc
-    # reassembly ran on the single-row-group scan partition; no-op when
-    # already parallel.
-    words = _spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col), F.posexplode_outer(ws).alias("pos", "word")
-    )
+    words = df.select(F.col(id_col), F.posexplode_outer(ws).alias("pos", "word"))
     tagged = words.join(
         _maybe_broadcast(vocab.select("word", "id"), broadcast), "word", "left"
     ).select(

@@ -58,8 +58,6 @@ def analyze_sequences(
     error_budget_pct: float = DEFAULT_ERROR_BUDGET_PCT,
     repartition_output: bool = True,
     fused: bool = True,
-    cache_input: bool = False,
-    min_partitions: int | None = None,
     stop_event=None,
 ) -> dict[str, DataFrame]:
     """Build (and optionally write) the full analysis over a sequences table.
@@ -76,18 +74,9 @@ def analyze_sequences(
     # to ~input_bytes/2*cores for narrow inputs), NOT from a repartition():
     # a round-robin shuffle of the full token payload measurably ANTI-scaled
     # here (32 concurrent shuffle writers on one local disk), and at corpus
-    # scale the input has thousands of splits anyway. `min_partitions`
-    # remains for genuinely unsplittable sources.
-    if min_partitions and raw.rdd.getNumPartitions() < min_partitions:
-        raw = raw.repartition(min_partitions)
-    if cache_input:
-        # NOT the default: caching raw token arrays cost 2x in profiling
-        # (columnar cache decode beats a pruned parquet re-scan only when
-        # the source is remote/slow). The frame path scans the tokens
-        # once; only a caller that also evaluates the doc profile (or the
-        # out_dir flow's checkpoint) reads them a second time, and a
-        # pushdown re-scan is the scale-safe default for that.
-        raw = raw.persist()
+    # scale the input has thousands of splits anyway. The token payload is
+    # not cached either: the frame path scans it once, and a pushdown
+    # re-scan is the scale-safe default for the doc profile's second read.
 
     # one vectorized pass: doc stats + quarantine verdict (A12-A14 + S2/S3)
     profile = doc_profile_fused(raw, frame_length=frame_length)

@@ -8,6 +8,7 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,6 +52,57 @@ def test_query_matches_oracle(spark, name):
     )
     assert not problems, (name, problems)
     assert n > 0
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_t_spreads_only_reads_that_carry_the_heavy_column(spark):
+    """A one-row-group documents / embeddings read that carries its
+    text / vector column comes back spread to defaultParallelism by a
+    round-robin Repartition that pruning and base-column filters pass
+    through; a read of only cheap columns, and `events`, stay plain
+    scans that take their filter as a pushed predicate."""
+    par = spark.sparkContext.defaultParallelism
+    for name, heavy, col in (
+        ("documents", "text", "n_chars"),
+        ("embeddings", "embedding", "label"),
+    ):
+        df = E._t(spark, SF, name, col, heavy)
+        assert df.rdd.getNumPartitions() == par, name
+        plan = _plan(df.where(F.col(col) > 3).select(col))
+        assert "RoundRobinPartitioning" in plan, plan
+        scan = plan[plan.index("FileScan parquet"):]
+        pushed = scan[scan.index("PushedFilters"):].split("]")[0]
+        assert f"GreaterThan({col},3)" in pushed, plan
+        schema = scan.split("ReadSchema: ")[1].split(">")[0]
+        assert schema.startswith(f"struct<{col}:") and "," not in schema, plan
+        assert E._t(spark, SF, name).rdd.getNumPartitions() == par, name
+        cheap = E._t(spark, SF, name, col)
+        assert cheap.rdd.getNumPartitions() == 1, name
+        assert "RoundRobinPartitioning" not in _plan(cheap), name
+    ev = _plan(E._t(spark, SF, "events").where(F.col("user_id") > 3))
+    assert "FileScan parquet" in ev and "RoundRobinPartitioning" not in ev, ev
+    pushed = ev[ev.index("PushedFilters"):].split("]")[0]
+    assert "GreaterThan(user_id,3)" in pushed, ev
+
+
+@pytest.mark.parametrize(
+    "name, spread",
+    [
+        ("corpus_rollup", False),
+        ("salted_agg", False),
+        ("topk_per_group", False),
+        ("vocab", True),
+        ("byte_entropy", True),
+    ],
+)
+def test_query_spread_follows_the_heavy_column(spark, name, spread):
+    """Queries over n_chars / source / lang read plain scans; queries
+    over documents.text read the spread table."""
+    plan = _plan(E.queries()[name](spark, SF))
+    assert ("RoundRobinPartitioning" in plan) == spread, plan
 
 
 def test_contract_invariants_locked():

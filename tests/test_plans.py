@@ -7,8 +7,10 @@ projection is wrong at 100 TB regardless of local timings."""
 from __future__ import annotations
 
 import contextlib
+import importlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -30,17 +32,13 @@ def test_filter_pushdown_reaches_parquet_scan(spark):
 def test_projection_prunes_read_schema(spark):
     import __spark_entry__ as E
 
-    # r6: _docs_tokens materializes (doc_id, toks) through a spread +
-    # lazy checkpoint, so the parquet scan lives in the CHECKPOINT's
-    # subtree and the query plan starts at Scan ExistingRDD. Assert the
-    # pruning property where it now lives: (a) the checkpoint input
-    # projects only doc_id+text at the scan (ReadSchema), and (b) the
-    # consumer plan reads only the 2-column materialized schema.
-    plan = plan_of(
-        spark.read.parquet(f"{SF}/documents.parquet").select(
-            "doc_id", "text"
-        )
-    )
+    # _docs_tokens checkpoints its (doc_id, toks) projection of the
+    # spread documents read, so the query plan starts at Scan
+    # ExistingRDD. Assert the pruning property on both sides: (a) the
+    # (doc_id, text) projection it checkpoints reads only those columns
+    # at the scan, through the spread (ReadSchema), and (b) the consumer
+    # plan reads only the 2-column materialized schema.
+    plan = plan_of(E._t(spark, SF, "documents").select("doc_id", "text"))
     scan = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "doc_id" in scan and "text" in scan
     for col in ("lang", "source", "n_chars"):
@@ -103,7 +101,7 @@ def test_flagship_frame_path_is_one_token_pass(spark, tiny_seqs):
 def test_lsh_candidate_stages_are_single_eval(spark):
     """Regression guard for the single-eval restructure: each LSH
     candidate generator must evaluate its signature UDF EXACTLY once in
-    the plan (Catalyst used to duplicate it below the spread exchange via
+    the plan (Catalyst used to duplicate it into the scan via
     inferred-filter pushdown, and again on the self-join build side —
     4 ArrowEvalPython nodes where 1 suffices)."""
     from audiopro_essentia_spark.operators.dedup import (
@@ -311,20 +309,36 @@ def test_fertility_single_exchange_zero_python(spark):
     assert "ArrowEvalPython" not in simple and "BatchEvalPython" not in simple
 
 
+@pytest.mark.parametrize(
+    "module, op",
+    [
+        ("operators.vocab", "build_vocab"),
+        ("operators.tfidf", "tfidf_top_terms"),
+        ("operators.aggregates", "source_kl_divergence"),
+        ("operators.dedup", "minhash_lsh_candidates"),
+    ],
+)
+def test_operator_never_repartitions_for_layout(spark, module, op):
+    """Operators take the layout they are given: on the one-row-group
+    read (ONE scan partition) no operator adds a round-robin spread —
+    the entry spreads its tables once, at the read (__spark_entry__._t)."""
+    fn = getattr(importlib.import_module(f"audiopro_essentia_spark.{module}"), op)
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    assert d.rdd.getNumPartitions() == 1
+    simple = fn(d)._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in simple, simple
+
+
 def test_gopher_zero_shuffle_pruned_scan(spark):
     """gopher_quality is ONE codegen projection over the scan: zero
-    Python, the scan reads only (doc_id, text), and the only Exchange
-    allowed is the conditional _spread round-robin (r6 — a local
-    single-row-group artifact fix that no-ops on a parallel scan; the
-    projection itself must never require a shuffle)."""
+    Python, zero Exchange, and the scan reads only (doc_id, text)."""
     from audiopro_essentia_spark.functions.cleaning import gopher_quality
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
     df = gopher_quality(d)
     plan = plan_of(df)
     simple = df._jdf.queryExecution().executedPlan().toString()
-    assert simple.count("Exchange") <= 1, simple
-    assert "hashpartitioning" not in simple, simple  # spread is RR only
+    assert simple.count("Exchange") == 0, simple
     assert "ArrowEvalPython" not in simple and "BatchEvalPython" not in simple
     scan = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "doc_id" in scan and "text" in scan
