@@ -30,7 +30,7 @@ from audiopro_essentia_spark.operators import similarity as SIM  # noqa: E402
 from audiopro_essentia_spark.operators.aggregates import reject_reason_col  # noqa: E402
 from audiopro_essentia_spark.operators.asof import asof_join  # noqa: E402
 from audiopro_essentia_spark.operators.framing import frame_tokens  # noqa: E402
-from audiopro_essentia_spark.operators.kernel import with_frame_features  # noqa: E402
+from audiopro_essentia_spark.operators.fused import fused_frame_features  # noqa: E402
 from audiopro_essentia_spark.operators.skew import salted_agg  # noqa: E402
 from audiopro_essentia_spark.operators.temporal import (  # noqa: E402
     session_tempo,
@@ -54,7 +54,7 @@ DT_CLF_WEIGHTS = (
 # kernel-surface framing params (FFT features; 9 rfft bins, 7 mels)
 KF_, KH_, KSR_, KSCALE_ = 16, 4, 44100, 64.0
 GEO_REP_ = 64  # token-array replication for the F=2048 full-geometry query
-KMELS_ = 7  # min(N_MELS, max(2, KF_//2 - 1)) — kernel.make_frame_kernel
+KMELS_ = 7  # min(N_MELS, max(2, KF_//2 - 1)) — fused.fused_frame_features
 KERNEL_FEATURES = (
     "rms", "volume", "zero_crossing_rate", "spectral_centroid",
     "spectral_bandwidth", "spectral_flatness", "spectral_rolloff",
@@ -93,7 +93,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str, *cols: str) -> DataFrame:
 def _docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tokens := per-word char lengths of documents.text (portable),
     checkpointed: consumers filter on the DERIVED toks column (e.g.
-    mfcc_delta's size(toks) frame gate) and read it in several branches."""
+    frame_tokens' size(toks) frame gate) and read it in several branches."""
     return (
         _t(spark, sf_dir, "documents")
         .select(F.col("doc_id"), T.token_lengths(F.col("text")).alias("toks"))
@@ -109,9 +109,9 @@ FRAMES_CTE = DT.frames_cte(DF_, DH_)
 def _project_kernel_scalars(
     df: DataFrame, feats: tuple[str, ...], n_mfcc: int
 ) -> DataFrame:
-    """Round-6 scalar projection of a frame-feature DataFrame: array-typed
-    outputs (mfcc) become mfcc_i columns, frequency_bands struct becomes
-    fb_* columns — the driver canonicalizer cannot hash raw arrays."""
+    """Round-6 scalar projection of a fused_frame_features DataFrame:
+    array-typed outputs (mfcc, chroma) become mfcc_i / chroma_i columns —
+    the driver canonicalizer cannot hash raw arrays."""
     from audiopro_essentia_spark.operators.kernel import BAND_NAMES
 
     cols = [
@@ -133,15 +133,7 @@ def _project_kernel_scalars(
                 for i in range(N_CHROMA)
             )
         elif f == "frequency_bands":
-            src = (
-                "frequency_bands.{b}"
-                if "frequency_bands" in df.columns
-                else "fb_{b}"
-            )
-            cols.extend(
-                F.round(F.col(src.format(b=b)), 6).alias(f"fb_{b}")
-                for b in BAND_NAMES
-            )
+            cols.extend(F.round(f"fb_{b}", 6).alias(f"fb_{b}") for b in BAND_NAMES)
         else:
             cols.append(F.round(f, 6).alias(f))
     return df.select(*cols)
@@ -1470,13 +1462,9 @@ def q_kernel_features(spark, sf_dir):
     literals as the kernel)."""
     from audiopro_essentia_spark.constants import N_MFCC
 
-    toks = _docs_tokens(spark, sf_dir)
-    framed = frame_tokens(
-        toks, frame_length=KF_, hop=KH_, sample_rate=KSR_, tokens_col="toks",
-        id_cols=("doc_id",), carry_cols=(), base_ts_col=None,
-    )
-    out = with_frame_features(
-        framed, frame_length=KF_, sample_rate=KSR_, token_scale=KSCALE_,
+    out = fused_frame_features(
+        _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
+        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
         features=KERNEL_FEATURES, chroma_band=(0.0, KSR_ / 2.0),
     )
     return _project_kernel_scalars(out, KERNEL_FEATURES, N_MFCC)
@@ -1486,22 +1474,18 @@ def q_kernel_full_geometry(spark, sf_dir):
     """W1+A1-A3 at the PRODUCTION frame geometry (F=2048, H=512,
     SR=44100 — reference constants.py:23-24): each doc's token array is
     replicated x64 (deterministic) so 10-100-word fixture docs produce
-    real 2048-token frames, then the SAME frame_tokens + with_frame_features
-    path as q_kernel_features runs with time-domain features only (the
-    DFT twins' literal-twiddle trick is infeasible at F=2048).
+    real 2048-token frames, then the SAME fused kernel (framing inside
+    one mapInPandas) as q_kernel_features runs with time-domain features
+    only (the DFT twins' literal-twiddle trick is infeasible at F=2048).
     Hash-checked against the list-based DuckDB twin
     (duck_twins.kernel_time_sql)."""
     toks = _docs_tokens(spark, sf_dir).select(
-        "doc_id", F.flatten(F.array_repeat(F.col("toks"), GEO_REP_)).alias("toks")
+        "doc_id",
+        F.flatten(F.array_repeat(F.col("toks"), GEO_REP_)).alias("tokens"),
     )
-    framed = frame_tokens(
+    out = fused_frame_features(
         toks, frame_length=2048, hop=512, sample_rate=44100,
-        tokens_col="toks", id_cols=("doc_id",), carry_cols=(),
-        base_ts_col=None,
-    )
-    out = with_frame_features(
-        framed, frame_length=2048, sample_rate=44100, token_scale=KSCALE_,
-        features=("rms", "volume", "zero_crossing_rate"),
+        token_scale=KSCALE_, features=("rms", "volume", "zero_crossing_rate"),
     )
     return out.select(
         "doc_id",
@@ -1528,13 +1512,9 @@ def q_mfcc_delta(spark, sf_dir):
         with_frame_deltas,
     )
 
-    toks = _docs_tokens(spark, sf_dir)
-    framed = frame_tokens(
-        toks, frame_length=KF_, hop=KH_, sample_rate=KSR_, tokens_col="toks",
-        id_cols=("doc_id",), carry_cols=(), base_ts_col=None,
-    )
-    out = with_frame_features(
-        framed, frame_length=KF_, sample_rate=KSR_, token_scale=KSCALE_,
+    out = fused_frame_features(
+        _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
+        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
         features=("mfcc",),
     )
     sel = out.select(
@@ -1630,9 +1610,9 @@ def q_rhythm(spark, sf_dir):
 def q_fused_pipeline(spark, sf_dir):
     """W1+A1-A11 fused mapInPandas path (framing inside the kernel) over
     derived tokens — hash-checked against the same generated DuckDB DFT
-    twin as q_kernel_features (both paths are semantically identical)."""
+    twin as q_kernel_features (the same kernel call with a narrower
+    feature set and a string doc_id)."""
     from audiopro_essentia_spark.constants import N_MFCC
-    from audiopro_essentia_spark.operators.fused import fused_frame_features
 
     toks = _docs_tokens(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),

@@ -82,8 +82,8 @@ def kernel_sql(
     doc_id_varchar: bool = False,
     chroma_band: tuple[float, float] | None = None,
 ) -> str:
-    """DuckDB twin of frame_tokens + with_frame_features for the scalar +
-    mfcc_i + chroma_i + fb_* projection. The chroma peak-fold is stable
+    """DuckDB twin of the fused kernel (fused.fused_frame_features) for
+    the scalar + mfcc_i + chroma_i + fb_* projection. The chroma peak-fold is stable
     only because the snapped symmetry twiddles keep both spectra within
     ~1e-15 (see below)."""
     c = _consts(frame_length, sample_rate, n_mels)

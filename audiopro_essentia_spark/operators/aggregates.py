@@ -120,18 +120,6 @@ def reject_reason_col(
     )
 
 
-def split_quarantine(
-    df: DataFrame, tokens_col: str = "tokens", **kwargs
-) -> tuple[DataFrame, DataFrame]:
-    """(accepted, quarantined-with-reason). The quarantine side is a
-    side-output table (SURVEY.md S2/S3); downstream framing only ever sees
-    accepted rows, so the n_tok >= F invariant holds by construction."""
-    tagged = df.withColumn("reject_reason", reject_reason_col(tokens_col, **kwargs))
-    ok = tagged.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    bad = tagged.filter(F.col("reject_reason").isNotNull())
-    return ok, bad
-
-
 # doc_profile_fused's statistics, in output order, with their DDL types
 DOC_STATS = (
     ("peak_amplitude", "double"),

@@ -1,17 +1,18 @@
-"""Fused framing + feature kernel as ONE mapInPandas stage (the
-performance path of W1 + A1-A11).
+"""Fused framing + feature kernel as ONE mapInPandas stage: the one way
+into the batched feature kernel (W1 + A1-A11), used by the flagship plan
+and by every kernel query of the driver.
 
-Why this exists (measured on local[32], 67M tokens / 117k frames):
-materializing 2048-token windows JVM-side (explode + slice) and shipping
-them through Arrow costs ~4x the raw token bytes (75% overlap) plus
-per-element JVM list conversion — the pure kernel compute is ~12 CPU-s but
-the explode+slice plan spends 19-43 s. This operator ships each doc's
-token array to Python ONCE and frames it with numpy stride tricks
-(sliding_window_view — zero-copy view), then runs the exact same batched
-kernel (_kernel_batch). Semantics are identical to
-frame_tokens + with_frame_features (odd-trim, tail truncation, frame-start
-time_ms, frame-end available_ts); tests assert equality against the numpy
-oracle for both paths.
+Why framing happens here (measured on local[32], 67M tokens / 117k
+frames): materializing 2048-token windows JVM-side (explode + slice) and
+shipping them through Arrow costs ~4x the raw token bytes (75% overlap)
+plus per-element JVM list conversion — the pure kernel compute is ~12
+CPU-s but the explode+slice plan spent 19-43 s. This operator ships each
+doc's token array to Python ONCE and frames it with numpy stride tricks
+(sliding_window_view — zero-copy view), then runs the batched kernel
+(kernel._kernel_batch). The framing follows framing.frame_tokens
+(odd-trim, tail truncation, frame-start time_ms, frame-end
+available_ts); tests pin it against the numpy oracle and frame_tokens'
+timestamps.
 
 In the flagship plan (plans/pipeline.py) this is the ONLY token pass on
 the frame path: with validate=True + doc_stats=True the kernel also
@@ -75,9 +76,9 @@ def fused_frame_features(
     """sequences(doc_id, tokens[, base_ts]) -> frame feature rows.
 
     Output: doc_id, frame_idx, time_ms[, event_ts, available_ts],
-    <feature columns>, ferror[, rms_amplitude, dynamic_range_db] — the
-    same shape with_frame_features yields (frequency_bands flattened to
-    fb_* columns here; see plans/pipeline.py for re-nesting).
+    <feature columns>, ferror[, rms_amplitude, dynamic_range_db], with
+    doc_id keeping its input type and frequency_bands flattened to fb_*
+    columns (nest_frequency_bands re-nests them).
 
     `validate=True` skips the docs the doc profile quarantines (empty,
     low_energy, too_short); `doc_stats=True` adds the J2 doc-level
@@ -93,7 +94,8 @@ def fused_frame_features(
     fields = kernel_output_fields(feats)
     has_ts = with_timestamps and "base_ts" in seqs.columns
 
-    ddl = "doc_id string, frame_idx int, time_ms double"
+    ddl = f"doc_id {seqs.schema['doc_id'].dataType.simpleString()}"
+    ddl += ", frame_idx int, time_ms double"
     if has_ts:
         ddl += ", event_ts timestamp, available_ts timestamp"
     ddl += ", " + ", ".join(f"{n} {t}" for n, t in fields)
@@ -116,8 +118,8 @@ def fused_frame_features(
                 if raw is None:
                     # NULL tokens (the row the profile branch tags 'empty')
                     # must be skipped, not crash the task: len(asarray(None))
-                    # raises on a 0-d object array. The non-fused path drops
-                    # the same row via framing's F.size filter.
+                    # raises on a 0-d object array. framing.frame_tokens
+                    # drops the same row via its F.size filter.
                     continue
                 toks = np.asarray(raw)
                 # NULL ELEMENTS inside the array: pyarrow converts a
@@ -220,8 +222,8 @@ def fused_frame_features(
                 if has_ts:
                     # floor(x+0.5) = Spark F.round's HALF_UP for x >= 0;
                     # np.round is banker's rounding and diverges on exact
-                    # .5 µs ties (power-of-two sample rates) from the
-                    # frame_tokens path — keep ONE rounding rule.
+                    # .5 µs ties (power-of-two sample rates) from
+                    # frame_tokens — keep ONE rounding rule.
                     bu = base_us[lo:hi]
                     null_ts = bu == np.iinfo(np.int64).min
                     ev = pd.Series(
@@ -248,8 +250,7 @@ def fused_frame_features(
                         av[null_ts] = pd.NaT
                     out["event_ts"] = ev
                     out["available_ts"] = av
-                # ferror tagging + feature nulling: ONE shared helper with
-                # the Series->struct kernel UDF (kernel.mask_kernel_outputs)
+                # ferror tagging + feature nulling (kernel.mask_kernel_outputs)
                 out.update(mask_kernel_outputs(res, fields, hi - lo))
                 if doc_stats:
                     for j, c in enumerate(DOC_ENRICH_COLS):

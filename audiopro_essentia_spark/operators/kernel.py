@@ -1,12 +1,12 @@
-"""A1-A11 — the fused per-frame feature kernel as ONE Arrow-vectorized
-pandas UDF.
+"""A1-A11 — the batched per-frame feature kernel.
 
 The Spark analog of the reference's `process_frame` scalar UDF fanned out
 over mp.Pool (/root/reference/src/audiopro/audio/processors.py:90-302,
 extractor.py:192-213). Design (SURVEY.md §2.9):
 
-- One Series->DataFrame pandas UDF over the `window` column; each Arrow
-  batch is np.stack'ed and every feature is computed with batched numpy
+- ONE way into the kernel: operators/fused.py's mapInPandas frames each
+  doc's token array in numpy and hands `_kernel_batch` <=KERNEL_CHUNK
+  (B, F) window batches; every feature is computed with batched numpy
   (one rfft per batch, matmuls for MFCC/chroma) — no per-row Python.
 - Feature-config pushdown (P1/P2): `features` selects which outputs are
   computed at all; the spectrum is computed only if a spectral feature is
@@ -29,12 +29,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..constants import (
-    ALL_FRAME_FEATURES,
     CHROMA_HARMONICS,
     CHROMA_MAX_FREQ,
     CHROMA_MIN_FREQ,
@@ -44,9 +42,7 @@ from ..constants import (
     FRAME_LENGTH,
     FREQUENCY_BANDS,
     N_CHROMA,
-    N_MELS,
     N_MFCC,
-    SAMPLE_RATE,
     SPECTRAL_FEATURES,
     TOKEN_SCALE,
 )
@@ -348,40 +344,8 @@ def _kernel_batch(
 KERNEL_CHUNK = 256  # cache-resident spectral temporaries (see fused.py note)
 
 
-def _kernel_batch_chunked(
-    wins: np.ndarray,
-    frame_length: int,
-    sample_rate: int,
-    token_scale: float,
-    features: tuple[str, ...],
-    n_mels: int,
-    chroma_band: tuple[float, float] | None = None,
-) -> dict[str, np.ndarray]:
-    """_kernel_batch in cache-sized chunks, results concatenated."""
-    if len(wins) <= KERNEL_CHUNK:
-        return _kernel_batch(
-            wins, frame_length, sample_rate, token_scale, features, n_mels,
-            chroma_band,
-        )
-    parts = [
-        _kernel_batch(
-            wins[lo : lo + KERNEL_CHUNK],
-            frame_length, sample_rate, token_scale, features, n_mels,
-            chroma_band,
-        )
-        for lo in range(0, len(wins), KERNEL_CHUNK)
-    ]
-    out: dict[str, object] = {}
-    for k in parts[0]:
-        if isinstance(parts[0][k], list):
-            out[k] = [v for p in parts for v in p[k]]
-        else:
-            out[k] = np.concatenate([p[k] for p in parts])
-    return out
-
-
 def kernel_output_fields(features: tuple[str, ...]) -> list[tuple[str, str]]:
-    """(name, ddl_type) pairs for the UDF's struct output, in order."""
+    """(name, ddl_type) pairs for the kernel's output columns, in order."""
     fields: list[tuple[str, str]] = []
     for f in features:
         if f in ("mfcc", "chroma"):
@@ -394,67 +358,19 @@ def kernel_output_fields(features: tuple[str, ...]) -> list[tuple[str, str]]:
     return fields
 
 
-def make_frame_kernel(
-    frame_length: int = FRAME_LENGTH,
-    sample_rate: int = SAMPLE_RATE,
-    features: tuple[str, ...] | None = None,
-    token_scale: float = TOKEN_SCALE,
-    n_mels: int | None = None,
-    chroma_band: tuple[float, float] | None = None,
-):
-    """Build the fused pandas UDF: window array<int> -> struct of features.
-
-    `features=None` means all (the reference computes volume by default even
-    with no config — processors.py:171-172). `chroma_band=None` means the
-    reference HPCP gate (40..5000 Hz)."""
-    feats = tuple(features) if features else ALL_FRAME_FEATURES
-    nm = n_mels or min(N_MELS, max(2, frame_length // 2 - 1))
-    fields = kernel_output_fields(feats)
-    ddl = ", ".join(f"{n}: {t}" for n, t in fields)
-
-    @pandas_udf(ddl)
-    # params unannotated: `from __future__ import annotations` turns
-    # annotations into strings, which pandas_udf inspection may reject
-    def _udf(wins):
-        if len(wins) == 0:
-            return pd.DataFrame({n: pd.Series(dtype=object) for n, _ in fields})
-        vals = wins.to_numpy()
-        # NULL or wrong-length windows (outer joins / corrupt upstream
-        # writes) become all-NaN frames: the kernel's own nonfinite
-        # check then tags them ferror='nonfinite_frame' with NULL features —
-        # the documented bad-row contract — instead of np.stack killing
-        # the stage. Well-formed batches take the original zero-copy path.
-        bad = [
-            i
-            for i, v in enumerate(vals)
-            if v is None or len(v) != frame_length
-        ]
-        if bad:
-            vals = list(vals)
-            for i in bad:
-                vals[i] = np.full(frame_length, np.nan)
-        W = np.stack(vals)
-        res = _kernel_batch_chunked(
-            W, frame_length, sample_rate, token_scale, feats, nm, chroma_band
-        )
-        return pd.DataFrame(mask_kernel_outputs(res, fields, len(wins)))
-
-    return _udf, feats
-
-
 # non-spectral outputs: nulled only on non-finite input, never on a
-# zero spectrum (:198-203). ONE tuple shared by both kernel paths.
+# zero spectrum (:198-203).
 NON_SPECTRAL_OUTPUTS = ("rms", "volume", "zero_crossing_rate")
 
 
 def mask_kernel_outputs(
     res: dict, fields: list[tuple[str, str]], n_rows: int
 ) -> dict:
-    """The ferror-tagging / feature-nulling contract, shared by the
-    Series->struct UDF above AND the fused mapInPandas path (fused.py) —
-    two hand-maintained copies of this block had already drifted in small
-    ways, and any future ferror category or non-spectral feature must
-    change BOTH paths identically or the paths' tested equality breaks.
+    """The ferror-tagging / feature-nulling contract applied to one
+    `_kernel_batch` result by the kernel's one caller, the fused
+    mapInPandas (fused.py): non-finite input -> ferror='nonfinite_frame'
+    and every feature NULL; zero spectrum -> ferror='zero_spectrum' and
+    the spectral features NULL.
 
     Pops _bad_input/_zero_spec from `res`; returns name -> column."""
     bad_input = res.pop("_bad_input")
@@ -482,39 +398,6 @@ def mask_kernel_outputs(
         else:
             data[name] = pd.Series([None] * n_rows, dtype=object)
     return data
-
-
-def with_frame_features(
-    frames: DataFrame,
-    features: tuple[str, ...] | None = None,
-    frame_length: int = FRAME_LENGTH,
-    sample_rate: int = SAMPLE_RATE,
-    token_scale: float = TOKEN_SCALE,
-    window_col: str = "window",
-    keep_window: bool = False,
-    n_mels: int | None = None,
-    chroma_band: tuple[float, float] | None = None,
-) -> DataFrame:
-    """Apply the fused kernel and flatten its struct into columns; re-nest
-    `frequency_bands` as a struct<sub_bass..treble> (reference
-    types.py:134-140)."""
-    udf, feats = make_frame_kernel(
-        frame_length, sample_rate, features, token_scale, n_mels, chroma_band
-    )
-    out = frames.withColumn("_feat", udf(F.col(window_col)))
-    keep = [c for c in frames.columns if keep_window or c != window_col]
-    cols: list[Column] = [F.col(c) for c in keep]
-    for f in feats:
-        if f == "frequency_bands":
-            cols.append(
-                F.struct(
-                    *[F.col(f"_feat.fb_{b}").alias(b) for b in BAND_NAMES]
-                ).alias("frequency_bands")
-            )
-        else:
-            cols.append(F.col(f"_feat.{f}").alias(f))
-    cols.append(F.col("_feat.ferror").alias("ferror"))
-    return out.select(*cols)
 
 
 # ---------------------------------------------------------------------------

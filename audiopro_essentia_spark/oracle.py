@@ -74,23 +74,6 @@ def frame_time_ms(
     return ((start_sample + frame_idx * hop) / sample_rate) * 1000.0
 
 
-def frame_available_offset_us(
-    frame_idx: int,
-    sample_rate: int = SAMPLE_RATE,
-    hop: int = HOP_LENGTH,
-    frame_length: int = FRAME_LENGTH,
-    start_sample: int = 0,
-) -> int:
-    """Leakage-free availability time offset in µs: the frame END
-    (SURVEY.md §1.3 — a frame reads F-1 samples past its start time)."""
-    last = start_sample + frame_idx * hop + frame_length - 1
-    # floor(x+0.5) == the engine's HALF_UP (F.round / fused floor+0.5);
-    # Python round() is banker's and diverges on exact .5 µs ties
-    import math
-
-    return int(math.floor(last / sample_rate * 1e6 + 0.5))
-
-
 # --------------------------------------------------------------------------
 # per-frame features — reference processors.py:90-302
 # --------------------------------------------------------------------------

@@ -21,10 +21,10 @@ third branch (extract_rhythm) is operators/rhythm.py, outside this plan.
 Scale design:
 - Framing, features, quarantine and enrichment are one narrow
   Arrow-batched map: no shuffle, no join on the frame path.
-- `fused=False` is the oracle composition (split_quarantine ->
-  frame_tokens -> with_frame_features) and keeps the reference's J2 shape:
-  an `F.broadcast` left join of the accepted doc stats (1 row/doc vs
-  ~n_tok/512 rows/doc).
+- There is one frame path, operators/fused.py. Its reference is the doc
+  profile: each frame's rms_amplitude / dynamic_range_db equal its doc's
+  doc_metadata row, which is what the reference's J2 broadcast join
+  would attach.
 - The only shuffles are the writer's completion aggregate and the final
   range partition for ordered output (O1: sortWithinPartitions after
   repartitionByRange — no global sort).
@@ -36,9 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import DEFAULT_ERROR_BUDGET_PCT, FRAME_LENGTH, HOP_LENGTH, SAMPLE_RATE
-from ..operators.framing import frame_tokens
 from ..operators.fused import fused_frame_features, nest_frequency_bands
-from ..operators.kernel import with_frame_features
 from ..operators.aggregates import DOC_ENRICH_COLS, doc_profile_fused
 from ..sources.sinks import CheckpointedWriter
 
@@ -57,7 +55,6 @@ def analyze_sequences(
     fmt: str = "parquet",
     error_budget_pct: float = DEFAULT_ERROR_BUDGET_PCT,
     repartition_output: bool = True,
-    fused: bool = True,
     stop_event=None,
 ) -> dict[str, DataFrame]:
     """Build (and optionally write) the full analysis over a sequences table.
@@ -92,58 +89,27 @@ def analyze_sequences(
     quarantined = profile.filter(F.col("reject_reason").isNotNull())
     doc_meta = profile.filter(F.col("reject_reason").isNull()).drop("reject_reason")
 
-    if fused:
-        # performance path: framing, validation and the J2 enrichment all
-        # happen inside the kernel (operators/fused.py) — each doc's
-        # tokens cross to Python once, rejected docs are skipped without a
-        # filter scan, and the doc stats need no profile scan or join.
-        # Every input row emits only its own frames, so a doc_id repeated
-        # k times yields k x its frames (a join would yield k^2 x).
-        feats = nest_frequency_bands(
-            fused_frame_features(
-                raw,
-                features=features,
-                frame_length=frame_length,
-                hop=hop,
-                sample_rate=sample_rate,
-                start_sample=start_sample,
-                validate=True,
-                doc_stats=True,
-            )
-        )
-        # the join's column order: the doc stats come last
-        enriched = feats.select(
-            *[c for c in feats.columns if c not in DOC_ENRICH_COLS], *DOC_ENRICH_COLS
-        )
-    else:
-        from ..operators.aggregates import split_quarantine
-
-        ok, _bad = split_quarantine(raw, frame_length=frame_length)
-        frames = frame_tokens(
-            ok,
+    # framing, validation and the J2 enrichment all happen inside the
+    # kernel (operators/fused.py): each doc's tokens cross to Python once,
+    # rejected docs are skipped without a filter scan, and the doc stats
+    # need no profile scan or join. Every input row emits only its own
+    # frames, so a doc_id repeated k times yields k x its frames.
+    feats = nest_frequency_bands(
+        fused_frame_features(
+            raw,
+            features=features,
             frame_length=frame_length,
             hop=hop,
             sample_rate=sample_rate,
             start_sample=start_sample,
-            carry_cols=(),
-            base_ts_col="base_ts" if "base_ts" in ok.columns else None,
+            validate=True,
+            doc_stats=True,
         )
-        feats = with_frame_features(
-            frames,
-            features=features,
-            frame_length=frame_length,
-            sample_rate=sample_rate,
-        )
-        # the fused path's column list: frequency_bands after ferror
-        tail = [c for c in feats.columns if c == "frequency_bands"]
-        feats = feats.select(*[c for c in feats.columns if c not in tail], *tail)
-        # J2 enrichment: frames (big) <- doc stats (tiny) broadcast hash
-        # join — the oracle for the fused kernel's in-kernel doc stats
-        enriched = feats.join(
-            F.broadcast(doc_meta.select("doc_id", *DOC_ENRICH_COLS)),
-            "doc_id",
-            "left",
-        )
+    )
+    # the doc stats come last (the reference J2 join's column order)
+    enriched = feats.select(
+        *[c for c in feats.columns if c not in DOC_ENRICH_COLS], *DOC_ENRICH_COLS
+    )
 
     if repartition_output:
         # O1 ordered emission without a global sort

@@ -1,9 +1,10 @@
-"""S1-S3 — the sequences source: scan + input contract + quarantine.
+"""S1-S3 — the sequences source: scan + input contract + time slice.
 
 The analog of the reference's load-and-validate stage
 (/root/reference/src/audiopro/audio/audio_loader.py:22-123,
 validator.py:24-123): schema assertion plays the file-extension/MIME
-pre-scan checks; the row-level signal checks become a quarantine split.
+pre-scan checks; the row-level signal checks are the quarantine verdict
+of operators/aggregates.py (`reject_reason_col`, `doc_profile_fused`).
 
 Scale notes: reading Parquet/Iceberg gives predicate pushdown and column
 pruning for free; `time_range` slicing (P3, audio_loader.py:72-81) is an
@@ -17,7 +18,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType
 
 from ..constants import SAMPLE_RATE
-from ..operators.aggregates import split_quarantine
 
 REQUIRED = {"doc_id": StringType(), "n_tok": IntegerType(), "source": StringType()}
 
@@ -82,20 +82,6 @@ def slice_time_range(
         tokens_col, F.slice(F.col(tokens_col), start_sample + 1, length)
     ).withColumn("n_tok", F.size(F.col(tokens_col)))
     return out, start_sample
-
-
-def load_and_validate(
-    spark: SparkSession,
-    path: str,
-    start_sec: float | None = None,
-    end_sec: float | None = None,
-) -> tuple[DataFrame, DataFrame, int]:
-    """Full source stage: scan -> time slice -> quarantine split.
-    Returns (accepted, quarantined, start_sample)."""
-    df = read_sequences(spark, path)
-    df, start_sample = slice_time_range(df, start_sec, end_sec)
-    ok, bad = split_quarantine(df)
-    return ok, bad, start_sample
 
 
 def with_sequence_metadata(

@@ -8,7 +8,7 @@ import pytest
 from audiopro_essentia_spark import oracle
 from audiopro_essentia_spark.operators.aggregates import (
     exact_median_expr,
-    split_quarantine,
+    reject_reason_col,
     with_doc_stats,
 )
 
@@ -49,15 +49,17 @@ def test_clipping_doc(spark, tiny_seqs):
 
 
 def test_quarantine_reasons(spark, tiny_seqs, tiny_table):
-    ok, bad = split_quarantine(tiny_seqs)
-    reasons = {r.doc_id: r.reject_reason for r in bad.collect()}
+    reasons = {
+        r.doc_id: r.reject_reason
+        for r in tiny_seqs.select(
+            "doc_id", reject_reason_col().alias("reject_reason")
+        ).collect()
+    }
     tbl = tiny_table.to_pydict()
+    assert set(reasons) == set(tbl["doc_id"])
     for doc_id, toks in zip(tbl["doc_id"], tbl["tokens"]):
         exp = oracle.reject_reason(np.asarray(toks, dtype=np.int64))
-        assert reasons.get(doc_id) == exp, (doc_id, reasons.get(doc_id), exp)
-    ok_ids = {r.doc_id for r in ok.select("doc_id").collect()}
-    assert ok_ids.isdisjoint(reasons)
-    assert ok_ids | set(reasons) == set(tbl["doc_id"])
+        assert reasons[doc_id] == exp, (doc_id, reasons[doc_id], exp)
 
 
 @pytest.mark.parametrize(

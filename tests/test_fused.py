@@ -1,5 +1,5 @@
-"""Fused mapInPandas path must be semantically IDENTICAL to the
-explode+slice+kernel path and to the numpy oracle."""
+"""The fused mapInPandas kernel — the one way into the feature kernel —
+against the numpy oracle, frame_tokens' timestamps and the doc profile."""
 
 from __future__ import annotations
 
@@ -74,10 +74,28 @@ def test_fused_timestamps_match_framing_path(spark, tiny_seqs):
 
 
 def test_fused_feature_pushdown(spark, tiny_seqs):
+    """P1/P2: only requested features appear; no spectral work requested ->
+    no spectrum columns (analog of needs_spectrum, processors.py:190-194)."""
     df = fused_frame_features(tiny_seqs, features=("rms", "volume"))
-    assert "rms" in df.columns and "mfcc" not in df.columns
-    n = df.count()
-    assert n > 100
+    assert "rms" in df.columns and "volume" in df.columns
+    assert "spectral_centroid" not in df.columns
+    assert "mfcc" not in df.columns
+    rows = df.collect()
+    assert len(rows) > 100
+    assert all(r.rms is not None for r in rows)
+
+
+def test_fused_doc_id_keeps_input_type(spark):
+    """doc_id's output type is the input's (bigint driver ids need no
+    cast round trip); a NULL id still emits its own frames."""
+    df = spark.createDataFrame(
+        [(1, list(range(64))), (None, list(range(64)))],
+        "doc_id bigint, tokens array<int>",
+    )
+    out = fused_frame_features(df, features=("rms",), frame_length=16, hop=8)
+    assert out.schema["doc_id"].dataType.simpleString() == "bigint"
+    ids = [r.doc_id for r in out.collect()]
+    assert ids.count(1) == ids.count(None) == 7
 
 
 def test_fused_timestamps_half_up_on_exact_ties(spark):
@@ -133,43 +151,37 @@ def test_fused_null_base_ts_yields_null_timestamps(spark):
     assert all(e is None and a is None for e, a in by_doc["b"])
 
 
-def test_analyze_sequences_unfused_path_matches_fused(spark, tmp_path):
-    """The oracle-form composition (fused=False: split_quarantine ->
-    frame_tokens -> with_frame_features -> broadcast join of the doc
-    profile) must equal the fused kernel pipeline row-for-row: the same
-    column list, the shared scalar features, and the J2 doc stats the
-    fused kernel computes in-kernel."""
+def test_analyze_sequences_frame_doc_stats_match_doc_metadata(spark, tmp_path):
+    """J2 against its reference, the doc profile: every frame carries its
+    doc's doc_metadata rms_amplitude / dynamic_range_db (what the
+    reference's broadcast join attaches), with the doc stats as the last
+    columns, after frequency_bands."""
     import pyarrow.parquet as pq
 
+    from audiopro_essentia_spark.constants import ALL_FRAME_FEATURES
     from audiopro_essentia_spark.fixtures import make_sequences
     from audiopro_essentia_spark.plans.pipeline import analyze_sequences
 
     p = str(tmp_path / "seqs.parquet")
     pq.write_table(make_sequences(profile="tiny"), p)
 
-    res_f = analyze_sequences(spark, p, repartition_output=False, fused=True)
-    res_u = analyze_sequences(spark, p, repartition_output=False, fused=False)
-    assert res_f["frame_features"].columns == res_u["frame_features"].columns
-    assert res_f["frame_features"].columns[-3:] == [
-        "frequency_bands", "rms_amplitude", "dynamic_range_db",
+    res = analyze_sequences(spark, p, repartition_output=False)
+    ff = res["frame_features"]
+    assert ff.columns == [
+        "doc_id", "frame_idx", "time_ms", "event_ts", "available_ts",
+        *[f for f in ALL_FRAME_FEATURES if f != "frequency_bands"],
+        "ferror", "frequency_bands", "rms_amplitude", "dynamic_range_db",
     ]
-    cols = [
-        "doc_id", "frame_idx", "rms", "volume", "spectral_centroid",
-        "rms_amplitude", "dynamic_range_db",
-    ]
-
-    def snap(df):
-        return {
-            (r.doc_id, r.frame_idx): tuple(
-                None if r[c] is None else round(r[c], 9) for c in cols[2:]
-            )
-            for r in df.select(*cols).collect()
-        }
-
-    a, b = snap(res_f["frame_features"]), snap(res_u["frame_features"])
-    assert len(a) == len(b) > 100
-    assert all(v[-1] is not None for v in a.values())
-    assert a == b
+    meta = {
+        r.doc_id: (r.rms_amplitude, r.dynamic_range_db)
+        for r in res["doc_metadata"].collect()
+    }
+    rows = ff.select("doc_id", "rms_amplitude", "dynamic_range_db").collect()
+    assert len(rows) > 100
+    assert {r.doc_id for r in rows} == set(meta)
+    for r in rows:
+        assert r.rms_amplitude is not None, r.doc_id
+        assert (r.rms_amplitude, r.dynamic_range_db) == meta[r.doc_id], r.doc_id
 
 
 def _write_seqs(path, docs):

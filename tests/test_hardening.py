@@ -36,25 +36,6 @@ def test_rhythm_null_tokens_is_empty_doc_not_crash(spark):
     assert "d0" in rows  # well-formed doc unaffected
 
 
-def test_kernel_null_window_gets_ferror_not_crash(spark):
-    """A NULL or wrong-length window row becomes an all-NaN frame and
-    rides the kernel's existing bad-input contract (ferror='nonfinite_frame',
-    NULL features) instead of np.stack killing the stage."""
-    from audiopro_essentia_spark.operators.kernel import make_frame_kernel
-
-    udf, feats = make_frame_kernel(
-        frame_length=8, sample_rate=100, features=("rms", "spectral_centroid")
-    )
-    df = spark.createDataFrame(
-        [(0, [1000] * 8), (1, None), (2, [2000] * 5)],
-        "i long, window array<int>",
-    ).select("i", udf(F.col("window")).alias("k"))
-    rows = {r.i: r.k for r in df.collect()}
-    assert rows[1]["ferror"] == "nonfinite_frame" and rows[1]["rms"] is None
-    assert rows[2]["ferror"] == "nonfinite_frame"
-    assert rows[0]["ferror"] is None and rows[0]["rms"] is not None
-
-
 def test_simhash_max_hamming_pigeonhole_guard(spark):
     from audiopro_essentia_spark.operators.dedup import (
         simhash_neardup_pairs,

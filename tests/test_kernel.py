@@ -1,70 +1,24 @@
-"""A1-A11 fused-kernel parity vs the numpy oracle at every
-doc_id x frame_idx (np.allclose gate per FIXTURES.md §3)."""
+"""A1-A11 kernel goldens: the HPCP chroma fold, silence handling, the
+default feature set, and the flux / contrast spectrum operators. The
+full per-frame oracle parity of the kernel is test_fused.py's."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
 
-from audiopro_essentia_spark import oracle
-from audiopro_essentia_spark.constants import ALL_FRAME_FEATURES, FREQUENCY_BANDS
+from audiopro_essentia_spark.constants import ALL_FRAME_FEATURES
 from audiopro_essentia_spark.operators.framing import frame_tokens
-from audiopro_essentia_spark.operators.kernel import with_frame_features
-
-RTOL = 1e-5
-ATOL = 1e-8
-SCALARS = (
-    "rms",
-    "volume",
-    "zero_crossing_rate",
-    "spectral_centroid",
-    "spectral_bandwidth",
-    "spectral_flatness",
-    "spectral_rolloff",
+from audiopro_essentia_spark.operators.fused import (
+    fused_frame_features,
+    nest_frequency_bands,
 )
 
 
 @pytest.fixture(scope="module")
 def features_df(spark, tiny_seqs):
-    frames = frame_tokens(tiny_seqs)
-    return with_frame_features(frames).orderBy("doc_id", "frame_idx").collect()
-
-
-@pytest.fixture(scope="module")
-def oracle_map(tiny_table):
-    out = {}
-    tbl = tiny_table.to_pydict()
-    for doc_id, toks in zip(tbl["doc_id"], tbl["tokens"]):
-        wins = oracle.frame_windows(np.asarray(toks, dtype=np.int32))
-        for i, w in enumerate(wins):
-            out[(doc_id, i)] = oracle.frame_features(w)
-    return out
-
-
-def test_full_parity_every_frame(features_df, oracle_map):
-    assert len(features_df) == len(oracle_map) > 100
-    for row in features_df:
-        exp = oracle_map[(row.doc_id, row.frame_idx)]
-        if exp is None:
-            # zero-spectrum frame (all-zero doc): engine tags ferror
-            assert row.ferror is not None, (row.doc_id, row.frame_idx)
-            continue
-        assert row.ferror is None, (row.doc_id, row.frame_idx, row.ferror)
-        for k in SCALARS:
-            assert np.allclose(getattr(row, k), exp[k], rtol=RTOL, atol=ATOL), (
-                k,
-                row.doc_id,
-                row.frame_idx,
-                getattr(row, k),
-                exp[k],
-            )
-        assert np.allclose(row.mfcc, exp["mfcc"], rtol=RTOL, atol=ATOL)
-        assert np.allclose(row.chroma, exp["chroma"], rtol=1e-3, atol=1e-6)
-        got_fb = row.frequency_bands.asDict()
-        for b in FREQUENCY_BANDS:
-            assert np.allclose(
-                got_fb[b], exp["frequency_bands"][b], rtol=RTOL, atol=ATOL
-            ), (b, row.doc_id, row.frame_idx)
+    df = nest_frequency_bands(fused_frame_features(tiny_seqs))
+    return df.orderBy("doc_id", "frame_idx").collect()
 
 
 def _parab_triple(M, alpha, p0):
@@ -161,18 +115,6 @@ def test_silence_doc_volume_floor(features_df):
         assert r.rms == 0.0
         assert np.isclose(r.volume, 20 * np.log10(np.finfo(float).eps))
         assert r.ferror is not None
-
-
-def test_feature_selection_pushdown(spark, tiny_seqs):
-    """P1/P2: only requested features appear; no spectral work requested ->
-    no spectrum columns (analog of needs_spectrum, processors.py:190-194)."""
-    frames = frame_tokens(tiny_seqs).limit(50)
-    df = with_frame_features(frames, features=("rms", "volume"))
-    assert "rms" in df.columns and "volume" in df.columns
-    assert "spectral_centroid" not in df.columns
-    assert "mfcc" not in df.columns
-    rows = df.collect()
-    assert all(r.rms is not None for r in rows)
 
 
 def test_all_features_present_by_default(features_df):

@@ -219,21 +219,29 @@ def test_silence_segments_single_exchange(spark):
     assert simple.count("Exchange") == 1, simple
 
 
-def test_mfcc_delta_single_exchange_single_arrow_eval(spark):
-    """The delta/CMN stack must share ONE doc_id exchange + ONE sort
-    across both Window nodes, and the kernel UDF must evaluate exactly
-    once (a second ArrowEvalPython would double the dominant cost)."""
+@pytest.mark.parametrize(
+    "name", ["mfcc_delta", "kernel_features", "kernel_full_geometry"]
+)
+def test_kernel_query_is_one_map_in_pandas(spark, name):
+    """Every kernel query reaches the feature kernel one way: ONE
+    MapInPandas that frames each doc in numpy — no JVM window explode
+    (Generate) and no Series UDF (ArrowEvalPython). mfcc_delta's
+    delta/CMN stack must also share ONE doc_id exchange + ONE sort
+    across both Window nodes."""
     import __spark_entry__ as e
 
-    df = e.queries()["mfcc_delta"](spark, SF)
+    df = e.queries()[name](spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain()
     simple = buf.getvalue()
-    assert simple.count("ArrowEvalPython") == 1, simple
-    assert simple.count("Exchange") == 1, simple
-    assert simple.count("+- Sort") == 1, simple
-    assert simple.count("Window") == 2, simple
+    assert simple.count("MapInPandas") == 1, simple
+    assert "ArrowEvalPython" not in simple, simple
+    assert "Generate" not in simple, simple
+    if name == "mfcc_delta":
+        assert simple.count("Exchange") == 1, simple
+        assert simple.count("+- Sort") == 1, simple
+        assert simple.count("Window") == 2, simple
 
 
 def test_seq_metadata_zero_shuffle_zero_python(spark):

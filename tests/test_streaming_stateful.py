@@ -150,16 +150,15 @@ def test_pipeline_respects_custom_frame_length(spark, tmp_path):
     )
     p = str(tmp_path / "seqs.parquet")
     pq.write_table(tbl, p)
-    for fused in (True, False):
-        res = analyze_sequences(
-            spark, p, frame_length=512, hop=128,
-            out_dir=str(tmp_path / f"out_{fused}"), n_buckets=2, fused=fused,
-        )
-        assert res["quarantine"].count() == 0, fused
-        st = res["write_stats"]
-        # both docs frame at F=512: (1000-512)//128+1 + (5000-512)//128+1
-        assert st["total_rows"] == 4 + 36, (fused, st)
-        assert st["completion_ratio"] == 1.0, (fused, st)
+    res = analyze_sequences(
+        spark, p, frame_length=512, hop=128,
+        out_dir=str(tmp_path / "out"), n_buckets=2,
+    )
+    assert res["quarantine"].count() == 0
+    st = res["write_stats"]
+    # both docs frame at F=512: (1000-512)//128+1 + (5000-512)//128+1
+    assert st["total_rows"] == 4 + 36, st
+    assert st["completion_ratio"] == 1.0, st
 
 
 def test_streaming_dedup_drops_content_duplicates(spark, tmp_path):
