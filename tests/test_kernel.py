@@ -117,6 +117,17 @@ def test_silence_doc_volume_floor(features_df):
         assert r.ferror is not None
 
 
+def test_feature_selection_pushdown(spark, tiny_seqs):
+    """P1/P2: only requested features appear, for a spectral request too:
+    asking for the centroid alone emits no rms/volume/mfcc columns."""
+    df = fused_frame_features(tiny_seqs.limit(5), features=("spectral_centroid",))
+    assert "spectral_centroid" in df.columns
+    for absent in ("rms", "volume", "mfcc", "spectral_flux"):
+        assert absent not in df.columns
+    rows = df.collect()
+    assert rows and any(r.spectral_centroid is not None for r in rows)
+
+
 def test_all_features_present_by_default(features_df):
     row = features_df[0]
     for f in ALL_FRAME_FEATURES:
