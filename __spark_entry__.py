@@ -1475,7 +1475,7 @@ def q_kernel_full_geometry(spark, sf_dir):
     SR=44100 — reference constants.py:23-24): each doc's token array is
     replicated x64 (deterministic) so 10-100-word fixture docs produce
     real 2048-token frames, then the SAME fused kernel (framing inside
-    one mapInPandas) as q_kernel_features runs with time-domain features
+    one mapInArrow) as q_kernel_features runs with time-domain features
     only (the DFT twins' literal-twiddle trick is infeasible at F=2048).
     Hash-checked against the list-based DuckDB twin
     (duck_twins.kernel_time_sql)."""
@@ -1555,31 +1555,28 @@ def q_seq_metadata(spark, sf_dir):
 
 def q_spectral_flux(spark, sf_dir):
     """Onset strength: per-frame spectral flux + sigma-threshold onset
-    flags over derived tokens (F=16, H=4) — stateless Arrow spectrum UDF,
-    cross-frame diff as a declarative window lag; hash-checked against a
-    generated DuckDB DFT twin (duck_twins.flux_sql)."""
+    flags over derived tokens (F=16, H=4) — the fused kernel's spectrum
+    (one mapInArrow), cross-frame diff as a declarative window lag;
+    hash-checked against a generated DuckDB DFT twin (duck_twins.flux_sql)."""
     from audiopro_essentia_spark.operators.flux import spectral_flux
 
-    toks = _docs_tokens(spark, sf_dir)
-    framed = frame_tokens(
-        toks, frame_length=KF_, hop=KH_, sample_rate=KSR_, tokens_col="toks",
-        id_cols=("doc_id",), carry_cols=(), base_ts_col=None,
+    return spectral_flux(
+        _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
+        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
     )
-    return spectral_flux(framed, frame_length=KF_, token_scale=KSCALE_)
 
 
 def q_spectral_contrast(spark, sf_dir):
     """Per-frame spectral contrast (3 bands, ln peak/valley of sorted bin
-    magnitudes) — spectrum UDF + pure JVM array expressions; twin
-    generated from the same DFT literals (duck_twins.contrast_sql)."""
+    magnitudes) — the fused kernel's spectrum + pure JVM array
+    expressions; twin generated from the same DFT literals
+    (duck_twins.contrast_sql)."""
     from audiopro_essentia_spark.operators.flux import spectral_contrast
 
-    toks = _docs_tokens(spark, sf_dir)
-    framed = frame_tokens(
-        toks, frame_length=KF_, hop=KH_, sample_rate=KSR_, tokens_col="toks",
-        id_cols=("doc_id",), carry_cols=(), base_ts_col=None,
+    return spectral_contrast(
+        _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
+        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
     )
-    return spectral_contrast(framed, frame_length=KF_, token_scale=KSCALE_)
 
 
 def q_rhythm(spark, sf_dir):
@@ -1608,18 +1605,14 @@ def q_rhythm(spark, sf_dir):
 
 
 def q_fused_pipeline(spark, sf_dir):
-    """W1+A1-A11 fused mapInPandas path (framing inside the kernel) over
+    """W1+A1-A11 fused mapInArrow path (framing inside the kernel) over
     derived tokens — hash-checked against the same generated DuckDB DFT
     twin as q_kernel_features (the same kernel call with a narrower
-    feature set and a string doc_id)."""
+    feature set)."""
     from audiopro_essentia_spark.constants import N_MFCC
 
-    toks = _docs_tokens(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("toks").alias("tokens"),
-    )
     out = fused_frame_features(
-        toks,
+        _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
         features=FUSED_FEATURES,
         frame_length=KF_,
         hop=KH_,
@@ -5387,7 +5380,7 @@ WHERE round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
         ),
         "fused_pipeline": DT.kernel_sql(
             KF_, KH_, KSR_, KSCALE_, FUSED_FEATURES, KMELS_,
-            doc_id_varchar=True, chroma_band=(0.0, KSR_ / 2.0),
+            chroma_band=(0.0, KSR_ / 2.0),
         ),
         "kernel_full_geometry": DT.kernel_time_sql(
             2048, 512, 44100, KSCALE_, repeat=GEO_REP_

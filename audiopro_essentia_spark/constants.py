@@ -92,5 +92,6 @@ SPECTRAL_FEATURES: frozenset[str] = frozenset(
         "mfcc",
         "chroma",
         "frequency_bands",
+        "spectrum",  # internal kernel output: spectral flux / contrast read it
     }
 )

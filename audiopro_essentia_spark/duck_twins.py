@@ -79,7 +79,6 @@ def kernel_sql(
     token_scale: float,
     features: tuple[str, ...],
     n_mels: int,
-    doc_id_varchar: bool = False,
     chroma_band: tuple[float, float] | None = None,
 ) -> str:
     """DuckDB twin of the fused kernel (fused.fused_frame_features) for
@@ -103,10 +102,9 @@ def kernel_sql(
 
     spectral = fset & SPECTRAL_FEATURES
 
-    did = "CAST(doc_id AS VARCHAR) AS doc_id" if doc_id_varchar else "doc_id"
     ctes = [
         frames_cte(frame_length, hop),
-        f"a AS MATERIALIZED (SELECT {did}, frame_idx, {wd} FROM f)",
+        f"a AS MATERIALIZED (SELECT doc_id, frame_idx, {wd} FROM f)",
     ]
     out_cols = [
         "doc_id",

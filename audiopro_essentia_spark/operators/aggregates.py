@@ -196,7 +196,7 @@ def doc_profile_fused(
 
     carry = [c for c in carry_cols if c in seqs.columns]
     ddl = (
-        "doc_id string"
+        f"doc_id {seqs.schema['doc_id'].dataType.simpleString()}"
         + "".join(f", {c} {dict(seqs.dtypes)[c]}" for c in carry)
         + "".join(f", {name} {t}" for name, t in DOC_STATS)
         + ", reject_reason string"

@@ -2,12 +2,13 @@
 drives beat tracking (the quantity the reference's rhythm stage consumes
 conceptually; extractor surface: /root/reference/src/audiopro/audio/
 processors.py:90-302 computes per-frame spectra, this operator adds the
-frame-to-frame half-wave-rectified difference).
+frame-to-frame half-wave-rectified difference) — and spectral contrast.
 
-Distributed shape: the per-frame magnitude spectrum is a STATELESS Arrow
-UDF (same f32-quantize -> Hann -> f64 rfft recipe as the kernel, so the
-DuckDB DFT twin reuses the same literals), and the cross-frame difference
-is a declarative window lag over (doc, frame_idx) — Catalyst owns the
+Distributed shape: the per-frame magnitude spectrum is the fused kernel's
+`spectrum` output (fused.py's one mapInArrow, the kernel's f32-quantize
+-> Hann -> f64 rfft recipe, so the DuckDB DFT twin reuses the same
+literals), NULL only on non-finite input. The cross-frame difference is
+a declarative window lag over (doc, frame_idx) — Catalyst owns the
 ordering, so there is no chunk-boundary state to carry and the plan is
 one window sort per doc partition. Onset flags are a second window pass
 over the SAME partitioning (mean + sigma * stddev_pop of the round-6
@@ -16,78 +17,38 @@ flux), which reuses the sort.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..constants import FRAME_LENGTH, SAMPLE_RATE, TOKEN_SCALE
-from .kernel import _consts
+from ..constants import FRAME_LENGTH, HOP_LENGTH, SAMPLE_RATE, TOKEN_SCALE
+from .fused import fused_frame_features
 
 
-def make_spectrum_udf(
-    frame_length: int, token_scale: float, n_mels: int | None = None
-):
-    """Arrow UDF: int token window -> magnitude spectrum (array<double>),
-    bit-identical to the kernel's spectral path."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    hann = _consts(frame_length, SAMPLE_RATE, n_mels or 1)["hann"]
-
-    @pandas_udf("array<double>")
-    def _spec(windows):
-        # BATCHED: stack the whole Arrow batch and run ONE rfft per
-        # <=KERNEL_CHUNK rows (kernel discipline: per-row np.fft calls
-        # pay Python dispatch per frame; the batched transform is the
-        # same pocketfft per-row algorithm, bit-identical output)
-        from .kernel import KERNEL_CHUNK
-
-        vals = list(windows)
-        # wrong-length windows (a framing/flux frame_length mismatch)
-        # must not kill the stage in np.stack — they yield a NULL
-        # spectrum like NULL windows do (the kernel sibling's NaN-fill
-        # hardening, adapted: flux's contract is NULL row, not ferror)
-        idx = [
-            i
-            for i, w in enumerate(vals)
-            if w is not None and len(w) == len(hann)
-        ]
-        out = [None] * len(vals)
-        for c0 in range(0, len(idx), KERNEL_CHUNK):
-            chunk = idx[c0 : c0 + KERNEL_CHUNK]
-            W = np.stack([np.asarray(vals[i], dtype=np.float32) for i in chunk])
-            # identical to kernel.py:120-122 (f32 quantize, f32 Hann
-            # multiply, ONE upcast before the FFT)
-            w64 = ((W / np.float32(token_scale)) * hann[None, :]).astype(
-                np.float64
-            )
-            spec = np.abs(np.fft.rfft(w64, axis=1))
-            for j, i in enumerate(chunk):
-                out[i] = spec[j].tolist()
-        return pd.Series(out, dtype=object)
-
-    return _spec
+def _spectra(seqs, frame_length, hop, sample_rate, token_scale) -> DataFrame:
+    """(doc_id, frame_idx, _spec) from sequences(doc_id, tokens)."""
+    return fused_frame_features(
+        seqs, features=("spectrum",), frame_length=frame_length, hop=hop,
+        sample_rate=sample_rate, token_scale=token_scale,
+        with_timestamps=False,
+    ).select("doc_id", "frame_idx", F.col("spectrum").alias("_spec"))
 
 
 def spectral_flux(
-    frames: DataFrame,
+    seqs: DataFrame,
     frame_length: int = FRAME_LENGTH,
+    hop: int = HOP_LENGTH,
+    sample_rate: int = SAMPLE_RATE,
     token_scale: float = TOKEN_SCALE,
-    window_col: str = "window",
-    id_cols: tuple[str, ...] = ("doc_id",),
     onset_sigma: float = 1.5,
 ) -> DataFrame:
-    """(id_cols..., frame_idx, flux, is_onset) from framed token windows.
+    """(doc_id, frame_idx, flux, is_onset) from sequences(doc_id, tokens).
 
     flux[t] = sum over bins of max(0, |S_t| - |S_{t-1}|), 0.0 for the
     first frame of a doc; is_onset = flux > mean + onset_sigma * stddev
     of the doc's round-6 flux (population stddev — deterministic and
     identical in the SQL twin)."""
-    udf = make_spectrum_udf(frame_length, token_scale).asNondeterministic()
-    spec = frames.select(
-        *id_cols, "frame_idx", udf(F.col(window_col)).alias("_spec")
-    )
-    w = Window.partitionBy(*id_cols).orderBy("frame_idx")
+    spec = _spectra(seqs, frame_length, hop, sample_rate, token_scale)
+    w = Window.partitionBy("doc_id").orderBy("frame_idx")
     prev = F.lag("_spec").over(w)
     flux_raw = F.when(prev.isNull(), F.lit(0.0)).otherwise(
         F.aggregate(
@@ -96,7 +57,7 @@ def spectral_flux(
             lambda acc, x: acc + x,
         )
     )
-    wd = Window.partitionBy(*id_cols)
+    wd = Window.partitionBy("doc_id")
     out = spec.withColumn("flux", F.round(flux_raw, 6)).drop("_spec")
     # round-6 threshold: the comparison is then between two 1e-6-grid
     # numbers, immune to last-ulp summation-order differences vs the twin
@@ -109,11 +70,11 @@ def spectral_flux(
 
 
 def spectral_contrast(
-    frames: DataFrame,
+    seqs: DataFrame,
     frame_length: int = FRAME_LENGTH,
+    hop: int = HOP_LENGTH,
+    sample_rate: int = SAMPLE_RATE,
     token_scale: float = TOKEN_SCALE,
-    window_col: str = "window",
-    id_cols: tuple[str, ...] = ("doc_id",),
     n_bands: int = 3,
     alpha: float = 0.2,
 ) -> DataFrame:
@@ -122,9 +83,9 @@ def spectral_contrast(
     sorted bin magnitudes in the band (the librosa-family feature,
     public formulation; independent implementation).
 
-    Same stateless spectrum UDF as spectral_flux; the band split /
-    sort / quantile means are pure JVM array expressions after it —
-    no extra Python, no shuffle (narrow over the framed rows)."""
+    Same kernel spectrum as spectral_flux; the band split / sort /
+    quantile means are pure JVM array expressions after it — no extra
+    Python, no shuffle (narrow over the framed rows)."""
     nb = frame_length // 2 + 1
     if n_bands > nb:
         raise ValueError(
@@ -137,12 +98,9 @@ def spectral_contrast(
             f"n_bands={n_bands} yields an empty band for {nb} bins "
             f"(edges {edges}) — use fewer bands"
         )
-    udf = make_spectrum_udf(frame_length, token_scale).asNondeterministic()
-    spec = frames.select(
-        *id_cols, "frame_idx", udf(F.col(window_col)).alias("_spec")
-    )
+    spec = _spectra(seqs, frame_length, hop, sample_rate, token_scale)
     eps = F.lit(1e-10)
-    cols = [F.col(c) for c in (*id_cols, "frame_idx")]
+    cols = [F.col("doc_id"), F.col("frame_idx")]
     for b in range(n_bands):
         lo, hi = edges[b], edges[b + 1]
         band = F.array_sort(F.slice("_spec", lo + 1, hi - lo))

@@ -1,15 +1,17 @@
-"""Fused framing + feature kernel as ONE mapInPandas stage: the one way
-into the batched feature kernel (W1 + A1-A11), used by the flagship plan
-and by every kernel query of the driver.
+"""Fused framing + feature kernel as ONE mapInArrow stage: the one way
+into the batched feature kernel (W1 + A1-A11), used by the flagship plan,
+by every kernel query of the driver and, through the kernel's `spectrum`
+output, by spectral flux and contrast (operators/flux.py).
 
 Why framing happens here (measured on local[32], 67M tokens / 117k
 frames): materializing 2048-token windows JVM-side (explode + slice) and
 shipping them through Arrow costs ~4x the raw token bytes (75% overlap)
 plus per-element JVM list conversion — the pure kernel compute is ~12
 CPU-s but the explode+slice plan spent 19-43 s. This operator ships each
-doc's token array to Python ONCE and frames it with numpy stride tricks
-(sliding_window_view — zero-copy view), then runs the batched kernel
-(kernel._kernel_batch). The framing follows framing.frame_tokens
+doc's token array to Python ONCE as Arrow list offsets plus one flat
+value buffer, gathers each <=KERNEL_CHUNK chunk's windows from that
+buffer, runs the batched kernel (kernel._kernel_batch) and builds every
+output column as an Arrow array. The framing follows framing.frame_tokens
 (odd-trim, tail truncation, frame-start time_ms, frame-end
 available_ts); tests pin it against the numpy oracle and frame_tokens'
 timestamps.
@@ -18,14 +20,14 @@ In the flagship plan (plans/pipeline.py) this is the ONLY token pass on
 the frame path: with validate=True + doc_stats=True the kernel also
 applies the doc-level quarantine and attaches the J2 doc statistics
 (rms_amplitude, dynamic_range_db) through aggregates.doc_profile_np —
-the doc profile's own per-doc arithmetic — instead of a second
-mapInPandas scan of the corpus broadcast-joined back onto the frames.
+the doc profile's own per-doc arithmetic — instead of a second scan of
+the corpus broadcast-joined back onto the frames.
 
 Scale notes: input Arrow batches carry ~(rows x avg n_tok x 4) bytes; at
 1000-row batches and 16k-token docs that is ~64 MB per batch. Output rows
-are yielded in bounded chunks. One narrow stage: no shuffle, no JVM window
+are yielded per chunk. One narrow stage: no shuffle, no JVM window
 materialization. This is the UDTF shape of SURVEY.md §2.9 realized as
-mapInPandas.
+mapInArrow.
 """
 
 from __future__ import annotations
@@ -33,7 +35,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from ..constants import (
@@ -42,6 +45,7 @@ from ..constants import (
     HOP_LENGTH,
     N_MELS,
     SAMPLE_RATE,
+    SPECTRAL_FEATURES,
     TOKEN_SCALE,
 )
 from .aggregates import DOC_ENRICH_COLS, doc_profile_np
@@ -78,7 +82,10 @@ def fused_frame_features(
     Output: doc_id, frame_idx, time_ms[, event_ts, available_ts],
     <feature columns>, ferror[, rms_amplitude, dynamic_range_db], with
     doc_id keeping its input type and frequency_bands flattened to fb_*
-    columns (nest_frequency_bands re-nests them).
+    columns (nest_frequency_bands re-nests them). `features` names
+    entries of ALL_FRAME_FEATURES, plus `spectrum` (the per-frame
+    magnitude spectrum, NULL only on non-finite input) for flux and
+    contrast; any other name raises ValueError here, at plan build.
 
     `validate=True` skips the docs the doc profile quarantines (empty,
     low_energy, too_short); `doc_stats=True` adds the J2 doc-level
@@ -90,6 +97,12 @@ def fused_frame_features(
     itself runs.
     """
     feats = tuple(features) if features else ALL_FRAME_FEATURES
+    unknown = sorted(set(feats) - set(ALL_FRAME_FEATURES) - SPECTRAL_FEATURES)
+    if unknown:
+        raise ValueError(
+            f"unknown frame features {unknown}; expected names from "
+            f"{ALL_FRAME_FEATURES} or 'spectrum'"
+        )
     nm = n_mels or min(N_MELS, max(2, frame_length // 2 - 1))
     fields = kernel_output_fields(feats)
     has_ts = with_timestamps and "base_ts" in seqs.columns
@@ -104,160 +117,99 @@ def fused_frame_features(
 
     cols = ["doc_id", "tokens"] + (["base_ts"] if has_ts else [])
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids: list = []
-            frame_idx_parts: list[np.ndarray] = []
-            win_parts: list[np.ndarray] = []
-            base_us_parts: list[np.ndarray] = []
-            n_frames_per_doc: list[int] = []
-            enrich_parts: list[tuple[float, ...]] = []
-
-            for i in range(len(pdf)):
-                raw = pdf["tokens"].iloc[i]
-                if raw is None:
-                    # NULL tokens (the row the profile branch tags 'empty')
-                    # must be skipped, not crash the task: len(asarray(None))
-                    # raises on a 0-d object array. framing.frame_tokens
-                    # drops the same row via its F.size filter.
-                    continue
-                toks = np.asarray(raw)
-                # NULL ELEMENTS inside the array: pyarrow converts a
-                # list<int> with nulls to a float64 array carrying NaN
-                # (measured — NOT an object-dtype array, so a dtype check
-                # here would be dead code). The NaN flows into the kernel
-                # where the nonfinite check tags every frame of the doc
-                # ferror='nonfinite_frame' with NULL features — per-frame
-                # quarantine, same channel as non-finite input, and the
-                # doc profile marks the doc 'nonfinite'.
-                n = len(toks) - (len(toks) % 2)  # odd-trim
-                if n < frame_length:
-                    continue
-                if validate or doc_stats:
-                    # in-kernel quarantine (validator.py:80-123 semantics)
-                    # and J2 enrichment from the doc profile's own helper:
-                    # no second token scan, no broadcast join, and the
-                    # verdict cannot disagree with the quarantine table.
-                    # Past the length check the reason is nonfinite,
-                    # low_energy or NULL.
-                    stats, reason = doc_profile_np(toks, token_scale, frame_length)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            toks = batch.column(1)
+            off = toks.offsets.to_numpy()
+            # a NULL element turns the child into float64 NaN, which the
+            # kernel's nonfinite check tags ferror='nonfinite_frame' with
+            # NULL features on every frame covering it (per-frame
+            # quarantine; the doc profile marks the doc 'nonfinite')
+            vals = toks.values.to_numpy(zero_copy_only=False)
+            # odd-trim; NULL tokens (the row the profile tags 'empty')
+            # emit nothing, as framing.frame_tokens' size filter drops it
+            n = np.diff(off)
+            n -= n % 2
+            rows = np.flatnonzero(
+                toks.is_valid().to_numpy(zero_copy_only=False)
+                & (n >= frame_length)
+            )
+            enrich: list[list[float]] = []
+            if validate or doc_stats:
+                # in-kernel quarantine (validator.py:80-123 semantics)
+                # and J2 enrichment from the doc profile's own helper:
+                # no second token scan, no broadcast join, and the
+                # verdict cannot disagree with the quarantine table.
+                # Past the length check the reason is nonfinite,
+                # low_energy or NULL.
+                kept = []
+                for r in rows:
+                    stats, reason = doc_profile_np(
+                        vals[off[r] : off[r + 1]], token_scale, frame_length
+                    )
                     if validate and reason == "low_energy":
                         continue
+                    kept.append(r)
                     if doc_stats:
-                        enrich_parts.append(
-                            tuple(
-                                stats[c] if reason is None else np.nan
-                                for c in DOC_ENRICH_COLS
-                            )
+                        enrich.append(
+                            [stats[c] if reason is None else np.nan for c in DOC_ENRICH_COLS]
                         )
-                wins = np.lib.stride_tricks.sliding_window_view(
-                    toks[:n], frame_length
-                )[::hop]
-                nf = len(wins)
-                doc_ids.append(pdf["doc_id"].iloc[i])
-                n_frames_per_doc.append(nf)
-                frame_idx_parts.append(np.arange(nf, dtype=np.int32))
-                win_parts.append(wins)
-                if has_ts:
-                    ts_val = pdf["base_ts"].iloc[i]
-                    if pd.isna(ts_val):
-                        # NULL base_ts must yield NULL timestamps, not the
-                        # NaT int64 sentinel turned into a 1677-era instant
-                        base = np.int64(np.iinfo(np.int64).min)
-                    else:
-                        base = np.int64(pd.Timestamp(ts_val).value // 1000)
-                    base_us_parts.append(np.full(nf, base, dtype=np.int64))
-
-            if not doc_ids:
+                rows = np.asarray(kept, dtype=np.int64)
+            if not len(rows):
                 continue
 
-            # NO vstack of all windows: that materializes ~4x the token
-            # bytes (75% overlap) per Arrow batch BEFORE chunking — the
-            # chunk cap then bounds only the float64 temporaries, not peak
-            # memory. Windows stay zero-copy stride views per doc; each
-            # <=KERNEL_CHUNK chunk is materialized on demand.
-            fidx = np.concatenate(frame_idx_parts)
-            docs = np.repeat(np.asarray(doc_ids, dtype=object), n_frames_per_doc)
-            base_us = np.concatenate(base_us_parts) if has_ts else None
+            nf = (n[rows] - frame_length) // hop + 1
+            doc = np.repeat(np.arange(len(rows)), nf)
+            fidx = (np.arange(len(doc)) - (np.cumsum(nf) - nf)[doc]).astype(np.int32)
+            starts = off[rows][doc] + fidx.astype(np.int64) * hop
+            src = pa.array(rows[doc])  # the input row of every frame
+            # zero-copy (n_vals - F + 1, F) view: indexing it by frame
+            # start copies just one chunk's windows, never the ~4x
+            # overlap of a whole batch
+            wins = np.lib.stride_tricks.sliding_window_view(vals, frame_length)
+            if has_ts:
+                base_us = batch.column(2).cast(pa.int64())
             if doc_stats:
-                # NaN -> NULL in the Arrow conversion (as for the features)
-                enrich = np.repeat(
-                    np.asarray(enrich_parts, dtype=np.float64),
-                    n_frames_per_doc,
-                    axis=0,
-                )
-            offsets = np.concatenate(
-                ([0], np.cumsum(np.asarray(n_frames_per_doc, dtype=np.int64)))
-            )
-            total = int(offsets[-1])
+                enrich_f = np.asarray(enrich, dtype=np.float64)[doc]
 
-            def chunk_windows(lo: int, hi: int) -> np.ndarray:
-                parts = []
-                d = int(np.searchsorted(offsets, lo, side="right")) - 1
-                pos = lo
-                while pos < hi:
-                    take = int(min(hi, offsets[d + 1]) - pos)
-                    start = int(pos - offsets[d])
-                    parts.append(win_parts[d][start : start + take])
-                    pos += take
-                    d += 1
-                return parts[0] if len(parts) == 1 else np.vstack(parts)
-
-            for lo in range(0, total, KERNEL_CHUNK):
-                hi = min(lo + KERNEL_CHUNK, total)
+            for lo in range(0, len(doc), KERNEL_CHUNK):
+                hi = min(lo + KERNEL_CHUNK, len(doc))
                 res = _kernel_batch(
-                    chunk_windows(lo, hi),
+                    wins[starts[lo:hi]],
                     frame_length, sample_rate, token_scale, feats, nm,
                     chroma_band,
                 )
                 fi = fidx[lo:hi]
-                start = (
-                    start_sample + fi.astype(np.int64) * hop
-                )
-                out: dict[str, object] = {
-                    "doc_id": docs[lo:hi],
-                    "frame_idx": fi,
-                    "time_ms": start / sample_rate * 1000.0,
+                start = start_sample + fi.astype(np.int64) * hop
+                out: dict[str, pa.Array] = {
+                    "doc_id": batch.column(0).take(src[lo:hi]),
+                    "frame_idx": pa.array(fi),
+                    "time_ms": pa.array(start / sample_rate * 1000.0),
                 }
                 if has_ts:
                     # floor(x+0.5) = Spark F.round's HALF_UP for x >= 0;
                     # np.round is banker's rounding and diverges on exact
                     # .5 µs ties (power-of-two sample rates) from
-                    # frame_tokens — keep ONE rounding rule.
-                    bu = base_us[lo:hi]
-                    null_ts = bu == np.iinfo(np.int64).min
-                    ev = pd.Series(
-                        pd.to_datetime(
-                            np.where(null_ts, 0, bu)
-                            + np.floor(start * 1e6 / sample_rate + 0.5).astype(
-                                np.int64
-                            ),
-                            unit="us",
+                    # frame_tokens — keep ONE rounding rule. A NULL
+                    # base_ts stays NULL through the add.
+                    base = base_us.take(src[lo:hi])
+                    for name, pos in (
+                        ("event_ts", start),
+                        ("available_ts", start + frame_length - 1),
+                    ):
+                        us = np.floor(pos * 1e6 / sample_rate + 0.5).astype(np.int64)
+                        out[name] = pc.add(base, pa.array(us)).cast(
+                            pa.timestamp("us", tz="UTC")
                         )
-                    )
-                    last = start + frame_length - 1
-                    av = pd.Series(
-                        pd.to_datetime(
-                            np.where(null_ts, 0, bu)
-                            + np.floor(last * 1e6 / sample_rate + 0.5).astype(
-                                np.int64
-                            ),
-                            unit="us",
-                        )
-                    )
-                    if null_ts.any():
-                        ev[null_ts] = pd.NaT
-                        av[null_ts] = pd.NaT
-                    out["event_ts"] = ev
-                    out["available_ts"] = av
                 # ferror tagging + feature nulling (kernel.mask_kernel_outputs)
-                out.update(mask_kernel_outputs(res, fields, hi - lo))
+                out.update(mask_kernel_outputs(res, fields))
                 if doc_stats:
+                    # NaN -> NULL, as for the features
                     for j, c in enumerate(DOC_ENRICH_COLS):
-                        out[c] = enrich[lo:hi, j]
-                yield pd.DataFrame(out)
+                        out[c] = pa.array(enrich_f[lo:hi, j], from_pandas=True)
+                yield pa.RecordBatch.from_pydict(out)
 
-    return seqs.select(*cols).mapInPandas(gen, ddl)
+    return seqs.select(*cols).mapInArrow(gen, ddl)
 
 
 def nest_frequency_bands(df: DataFrame) -> DataFrame:

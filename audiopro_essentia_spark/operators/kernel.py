@@ -4,10 +4,13 @@ The Spark analog of the reference's `process_frame` scalar UDF fanned out
 over mp.Pool (/root/reference/src/audiopro/audio/processors.py:90-302,
 extractor.py:192-213). Design (SURVEY.md §2.9):
 
-- ONE way into the kernel: operators/fused.py's mapInPandas frames each
-  doc's token array in numpy and hands `_kernel_batch` <=KERNEL_CHUNK
-  (B, F) window batches; every feature is computed with batched numpy
-  (one rfft per batch, matmuls for MFCC/chroma) — no per-row Python.
+- ONE way into the kernel: operators/fused.py's mapInArrow reads each
+  Arrow batch's token values and offsets, gathers <=KERNEL_CHUNK (B, F)
+  window batches and hands them to `_kernel_batch`; every feature is
+  computed with batched numpy (one rfft per batch, matmuls for
+  MFCC/chroma) — no per-row Python. Array outputs (mfcc, chroma and the
+  internal `spectrum` that spectral flux / contrast read) come back as
+  2-D arrays and leave as Arrow list columns.
 - Feature-config pushdown (P1/P2): `features` selects which outputs are
   computed at all; the spectrum is computed only if a spectral feature is
   requested (processors.py:190-214 `needs_spectrum`).
@@ -28,7 +31,7 @@ no Python at all.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -277,6 +280,8 @@ def _kernel_batch(
     if fset & SPECTRAL_FEATURES:
         spec = np.abs(np.fft.rfft(W64, axis=1))
         zero_spec = (spec == 0).all(axis=1)  # processors.py:198-203
+        if "spectrum" in fset:
+            out["spectrum"] = spec
         # ONE gemm pass over spec for all three linear reductions
         # (see _consts m3) — sum, first and second frequency moments
         mom = spec @ c["m3"]
@@ -324,11 +329,9 @@ def _kernel_batch(
             mel_e = np.empty((B, len(c["fb_bands"])), dtype=np.float64)
             for m, (li, hi, w) in enumerate(c["fb_bands"]):
                 mel_e[:, m] = spec[:, li:hi] @ w if hi > li else 0.0
-            out["mfcc"] = list(np.log(mel_e + EPS) @ c["dct"].T)
+            out["mfcc"] = np.log(mel_e + EPS) @ c["dct"].T
         if "chroma" in fset:
-            out["chroma"] = list(
-                chroma_fold(spec, sample_rate, frame_length, chroma_band)
-            )
+            out["chroma"] = chroma_fold(spec, sample_rate, frame_length, chroma_band)
         for name in BAND_NAMES:
             if "frequency_bands" in fset:
                 li, hi = c["band_idx"][name]
@@ -348,7 +351,7 @@ def kernel_output_fields(features: tuple[str, ...]) -> list[tuple[str, str]]:
     """(name, ddl_type) pairs for the kernel's output columns, in order."""
     fields: list[tuple[str, str]] = []
     for f in features:
-        if f in ("mfcc", "chroma"):
+        if f in ("mfcc", "chroma", "spectrum"):
             fields.append((f, "array<double>"))
         elif f == "frequency_bands":
             fields.extend((f"fb_{b}", "double") for b in BAND_NAMES)
@@ -358,45 +361,36 @@ def kernel_output_fields(features: tuple[str, ...]) -> list[tuple[str, str]]:
     return fields
 
 
-# non-spectral outputs: nulled only on non-finite input, never on a
-# zero spectrum (:198-203).
-NON_SPECTRAL_OUTPUTS = ("rms", "volume", "zero_crossing_rate")
+# outputs nulled only on non-finite input, never on a zero spectrum
+# (:198-203). An all-zero spectrum is a valid spectrum: flux and contrast
+# (and their DuckDB twins) read it as zeros.
+ZERO_SPEC_SAFE_OUTPUTS = ("rms", "volume", "zero_crossing_rate", "spectrum")
 
 
-def mask_kernel_outputs(
-    res: dict, fields: list[tuple[str, str]], n_rows: int
-) -> dict:
+def mask_kernel_outputs(res: dict, fields: list[tuple[str, str]]) -> dict:
     """The ferror-tagging / feature-nulling contract applied to one
     `_kernel_batch` result by the kernel's one caller, the fused
-    mapInPandas (fused.py): non-finite input -> ferror='nonfinite_frame'
-    and every feature NULL; zero spectrum -> ferror='zero_spectrum' and
+    mapInArrow (fused.py): non-finite input -> ferror='nonfinite_frame'
+    and every output NULL; zero spectrum -> ferror='zero_spectrum' and
     the spectral features NULL.
 
-    Pops _bad_input/_zero_spec from `res`; returns name -> column."""
-    bad_input = res.pop("_bad_input")
-    zero_spec = res.pop("_zero_spec")
+    Returns name -> Arrow array (2-D outputs as list<double>)."""
+    bad_input = res["_bad_input"]
+    zero_spec = res["_zero_spec"]
     spectral_bad = bad_input | zero_spec
-    data: dict[str, object] = {}
-    for name, _t in fields:
-        if name == "ferror":
-            data[name] = pd.Series(
-                np.where(
-                    bad_input,
-                    "nonfinite_frame",
-                    np.where(zero_spec, "zero_spectrum", None),
-                )
+    data: dict[str, pa.Array] = {}
+    for name, _t in fields[:-1]:  # every output but the trailing ferror
+        bad = bad_input if name in ZERO_SPEC_SAFE_OUTPUTS else spectral_bad
+        col = res[name]
+        if col.ndim == 2:
+            offsets = np.arange(0, col.size + 1, col.shape[1], dtype=np.int32)
+            data[name] = pa.ListArray.from_arrays(
+                offsets, pa.array(col.ravel()), mask=pa.array(bad)
             )
-        elif name in res:
-            bad = bad_input if name in NON_SPECTRAL_OUTPUTS else spectral_bad
-            col = res[name]
-            if isinstance(col, list):  # array-valued
-                data[name] = pd.Series(
-                    [None if b else v for v, b in zip(col, bad)], dtype=object
-                )
-            else:
-                data[name] = pd.Series(np.where(bad, np.nan, col))
         else:
-            data[name] = pd.Series([None] * n_rows, dtype=object)
+            data[name] = pa.array(col, mask=bad)
+    tag = np.where(zero_spec, "zero_spectrum", None)
+    data["ferror"] = pa.array(np.where(bad_input, "nonfinite_frame", tag), pa.string())
     return data
 
 

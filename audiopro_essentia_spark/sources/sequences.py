@@ -47,8 +47,7 @@ def assert_sequences_schema(df: DataFrame) -> None:
     # nullable elements even for files with no null element, so a strict
     # schema check would reject every real table. A null ELEMENT arrives
     # in the kernels as NaN and lands in the nonfinite-frame ferror path
-    # (reference bad-frame semantics); an object-dtype guard in fused.py
-    # backstops exotic Arrow conversions with a contract-naming error.
+    # (reference bad-frame semantics).
 
 
 def slice_time_range(

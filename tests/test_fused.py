@@ -1,4 +1,4 @@
-"""The fused mapInPandas kernel — the one way into the feature kernel —
+"""The fused mapInArrow kernel — the one way into the feature kernel —
 against the numpy oracle, frame_tokens' timestamps and the doc profile."""
 
 from __future__ import annotations
@@ -280,12 +280,10 @@ def test_fused_null_tokens_row_skipped_not_crashed(spark):
 
 
 def test_fused_null_token_element_flags_nonfinite(spark):
-    # Arrow delivers a null ELEMENT as NaN in a float array (not an
-    # object array), so it flows into the kernel's nonfinite guard: the
-    # frames covering it get ferror='nonfinite_frame' + NULL features,
-    # exactly the reference's bad-frame semantics — not a crash, not a
-    # silent number. (The object-dtype ValueError in fused.py remains as
-    # a defensive guard for exotic Arrow paths.)
+    # A null ELEMENT turns the Arrow child values into float64 NaN, so
+    # it flows into the kernel's nonfinite guard: the frames covering it
+    # get ferror='nonfinite_frame' + NULL features, exactly the
+    # reference's bad-frame semantics — not a crash, not a silent number.
     from pyspark.sql import types as T2
 
     from audiopro_essentia_spark.operators.fused import fused_frame_features
@@ -305,3 +303,17 @@ def test_fused_null_token_element_flags_nonfinite(spark):
     assert by_idx[0]["rms"] is None
     assert by_idx[2]["ferror"] is None  # past the null: clean frame
     assert by_idx[2]["rms"] is not None
+
+
+def test_fused_unknown_feature_name_fails_at_plan_build(spark, tiny_seqs):
+    # a misspelt feature must fail loud before any job runs, not yield
+    # an all-NULL column with a NULL ferror — through the pipeline entry
+    # point too
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    with pytest.raises(ValueError, match="spectral_centriod"):
+        fused_frame_features(tiny_seqs, features=("rms", "spectral_centriod"))
+    with pytest.raises(ValueError, match="spectral_centriod"):
+        analyze_sequences(
+            spark, tiny_seqs.inputFiles()[0], features=("spectral_centriod",)
+        )

@@ -183,6 +183,20 @@ def test_sessionize_orders_by_measured_time_not_raw_column(spark):
     assert by_ts["1970-01-01 02:00:00"] == 1
 
 
+def test_doc_profile_fused_keeps_bigint_doc_id(spark):
+    """The profile's doc_id takes its type from the input schema, as the
+    fused kernel's does: a bigint id must not hit a string DDL."""
+    from audiopro_essentia_spark.operators.aggregates import doc_profile_fused
+
+    df = spark.createDataFrame(
+        [(7, list(range(1, 65))), (8, None)], "doc_id bigint, tokens array<int>"
+    )
+    prof = doc_profile_fused(df, frame_length=16)
+    assert dict(prof.dtypes)["doc_id"] == "bigint"
+    rows = {r.doc_id: r.reject_reason for r in prof.collect()}
+    assert rows == {7: None, 8: "empty"}
+
+
 def test_asof_rejects_matched_ts_in_right_values(spark):
     from audiopro_essentia_spark.operators.asof import asof_join
 
@@ -192,17 +206,6 @@ def test_asof_rejects_matched_ts_in_right_values(spark):
     )
     with pytest.raises(ValueError, match="matched_ts"):
         asof_join(left, right, on=("k",), left_ts="ts", right_ts="label_ts")
-
-
-def test_flux_wrong_length_window_yields_null_not_crash(spark):
-    from audiopro_essentia_spark.operators.flux import spectral_flux
-
-    rows = [("d", 0, [1000] * 8), ("d", 1, [2000] * 5), ("d", 2, [3000] * 8)]
-    df = spark.createDataFrame(
-        rows, "doc_id string, frame_idx int, window array<int>"
-    )
-    out = spectral_flux(df, frame_length=8).collect()
-    assert len(out) == 3  # no crash, every frame row survives
 
 
 def test_framing_and_rolling_param_guards(spark):

@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 
 from audiopro_essentia_spark.constants import ALL_FRAME_FEATURES
-from audiopro_essentia_spark.operators.framing import frame_tokens
 from audiopro_essentia_spark.operators.fused import (
     fused_frame_features,
     nest_frequency_bands,
@@ -148,10 +147,9 @@ def test_spectral_flux_matches_numpy_golden(spark, tiny_seqs):
     from audiopro_essentia_spark.operators.flux import spectral_flux
     from audiopro_essentia_spark.operators.kernel import _consts
 
-    frames = frame_tokens(tiny_seqs, carry_cols=(), base_ts_col=None)
     got = {
         (r.doc_id, r.frame_idx): (r.flux, r.is_onset)
-        for r in spectral_flux(frames).collect()
+        for r in spectral_flux(tiny_seqs).collect()
     }
     assert len(got) > 100
 
@@ -195,10 +193,9 @@ def test_spectral_contrast_numpy_golden(spark, tiny_seqs):
     from audiopro_essentia_spark.operators.flux import spectral_contrast
     from audiopro_essentia_spark.operators.kernel import _consts
 
-    frames = frame_tokens(tiny_seqs, carry_cols=(), base_ts_col=None)
     got = {
         (r.doc_id, r.frame_idx): (r.contrast_0, r.contrast_1, r.contrast_2)
-        for r in spectral_contrast(frames).collect()
+        for r in spectral_contrast(tiny_seqs).collect()
     }
     assert len(got) > 100
 

@@ -65,7 +65,7 @@ def test_enrichment_join_broadcasts_small_side(spark):
 
 
 def test_flagship_pipeline_single_shuffle_before_sink(spark, tiny_seqs):
-    """frame features path: narrow (scan -> mapInPandas); the only
+    """frame features path: narrow (scan -> mapInArrow); the only
     Exchanges allowed in the doc-profile branch are the 1-row global agg
     and the broadcast."""
     from audiopro_essentia_spark.operators.fused import fused_frame_features
@@ -91,7 +91,13 @@ def test_flagship_frame_path_is_one_token_pass(spark, tiny_seqs):
     plan = buf.getvalue()
     python_nodes = sum(
         plan.count(n)
-        for n in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+        for n in (
+            "MapInPandas",
+            "MapInArrow",
+            "ArrowEvalPython",
+            "BatchEvalPython",
+            "FlatMapGroupsInPandas",
+        )
     )
     assert python_nodes == 1, plan
     assert plan.count("FileScan parquet") == 1, plan
@@ -220,14 +226,23 @@ def test_silence_segments_single_exchange(spark):
 
 
 @pytest.mark.parametrize(
-    "name", ["mfcc_delta", "kernel_features", "kernel_full_geometry"]
+    "name",
+    [
+        "mfcc_delta",
+        "kernel_features",
+        "kernel_full_geometry",
+        "fused_pipeline",
+        "spectral_flux",
+        "spectral_contrast",
+    ],
 )
-def test_kernel_query_is_one_map_in_pandas(spark, name):
+def test_kernel_query_is_one_map_in_arrow(spark, name):
     """Every kernel query reaches the feature kernel one way: ONE
-    MapInPandas that frames each doc in numpy — no JVM window explode
-    (Generate) and no Series UDF (ArrowEvalPython). mfcc_delta's
-    delta/CMN stack must also share ONE doc_id exchange + ONE sort
-    across both Window nodes."""
+    MapInArrow that frames each doc in numpy — no JVM window explode
+    (Generate), no Series UDF (ArrowEvalPython) and no pandas map.
+    Spectral flux and contrast read the kernel's spectrum from the same
+    map. mfcc_delta's delta/CMN stack must also share ONE doc_id
+    exchange + ONE sort across both Window nodes."""
     import __spark_entry__ as e
 
     df = e.queries()[name](spark, SF)
@@ -235,7 +250,8 @@ def test_kernel_query_is_one_map_in_pandas(spark, name):
     with contextlib.redirect_stdout(buf):
         df.explain()
     simple = buf.getvalue()
-    assert simple.count("MapInPandas") == 1, simple
+    assert simple.count("MapInArrow") == 1, simple
+    assert "MapInPandas" not in simple, simple
     assert "ArrowEvalPython" not in simple, simple
     assert "Generate" not in simple, simple
     if name == "mfcc_delta":

@@ -23,10 +23,10 @@ NOTES = {
     "session_tempo": "one window pass + one hash agg sharing the shuffle",
     "tfidf": "linear shuffles; corpus size N enters as a broadcast one-row aggregate",
     "pack_shards": "distributed two-phase prefix sum; the only single-partition window is the B-row bucket-offset table",
-    "spectral_flux": "stateless Arrow spectrum UDF; cross-frame diff is a declarative window lag; onset threshold reuses the same sort",
+    "spectral_flux": "ONE MapInArrow (framing + the kernel's spectrum output); cross-frame diff is a declarative window lag; onset threshold reuses the same sort",
     "repetition": "grams built once in the explode path; counts fall out of the same aggregate",
-    "kernel_features": "ONE MapInPandas frames each doc in numpy and runs the kernel: no Generate, no ArrowEvalPython",
-    "spectral_contrast": "same spectrum UDF; band sort/quantile means are JVM array expressions, narrow",
+    "kernel_features": "ONE MapInArrow frames each doc in numpy and runs the kernel: no Generate, no ArrowEvalPython",
+    "spectral_contrast": "same MapInArrow spectrum as spectral_flux; band sort/quantile means are JVM array expressions, narrow",
     "decontaminate": "benchmark shingles broadcast; the corpus is never shuffled",
     "surprisal": "word-count agg with map-side combine; broadcast one-row total; linear join-back",
     "hashed_embedding": "slot counts -> map -> dense transform; norm is a scalar from the SAME aggregate (no projection-collapse blow-up)",
@@ -46,7 +46,7 @@ NOTES = {
     "temperature_sample": "per-source share agg (tiny) broadcast back as a tau-scaled keep-rate; the sample decision is a narrow content-hash predicate — no shuffle of the corpus",
     "cap_per_group": "two-phase (group,salt)->group window with WindowGroupLimit partial pushdown on BOTH phases — a hot group's top-N spreads over n_salts reducers before the final per-group limit",
     "silence_segments": "gap-and-island windows + segment agg all partitioned on doc_id — ONE exchange reused across both window passes and the groupBy; per-frame energy is an exact-integer JVM fold",
-    "mfcc_delta": "ONE MapInPandas (framing + kernel), then ONE doc_id Exchange + ONE Sort serving BOTH Window nodes (delta lags/edge values + CMN doc moments)",
+    "mfcc_delta": "ONE MapInArrow (framing + kernel), then ONE doc_id Exchange + ONE Sort serving BOTH Window nodes (delta lags/edge values + CMN doc moments)",
     "seq_metadata": "pure narrow JVM projection fused with the scan — zero Exchange, zero Python (md5/distinct/min/max are per-row array expressions)",
     "bpe_encode": "training reuses the bpe_merges loop (bounded word-freq table); the 6-merge apply is one linear chain of JVM folds over the SAME table — no extra shuffle beyond the word agg",
     "drift_psi": "ONE map-side-combinable (group,bucket) count shuffle over the corpus; spine cross-join, rest-of-corpus subtraction and the PSI fold all run on the n_groups x n_buckets aggregate (broadcast joins)",
