@@ -1562,7 +1562,7 @@ def q_spectral_flux(spark, sf_dir):
 
     return spectral_flux(
         _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
-        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
+        frame_length=KF_, hop=KH_, token_scale=KSCALE_,
     )
 
 
@@ -1575,7 +1575,7 @@ def q_spectral_contrast(spark, sf_dir):
 
     return spectral_contrast(
         _docs_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens"),
-        frame_length=KF_, hop=KH_, sample_rate=KSR_, token_scale=KSCALE_,
+        frame_length=KF_, hop=KH_, token_scale=KSCALE_,
     )
 
 

@@ -20,16 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..constants import FRAME_LENGTH, HOP_LENGTH, SAMPLE_RATE, TOKEN_SCALE
+from ..constants import FRAME_LENGTH, HOP_LENGTH, TOKEN_SCALE
 from .fused import fused_frame_features
 
 
-def _spectra(seqs, frame_length, hop, sample_rate, token_scale) -> DataFrame:
+def _spectra(seqs, frame_length, hop, token_scale) -> DataFrame:
     """(doc_id, frame_idx, _spec) from sequences(doc_id, tokens)."""
     return fused_frame_features(
         seqs, features=("spectrum",), frame_length=frame_length, hop=hop,
-        sample_rate=sample_rate, token_scale=token_scale,
-        with_timestamps=False,
+        token_scale=token_scale, with_timestamps=False,
     ).select("doc_id", "frame_idx", F.col("spectrum").alias("_spec"))
 
 
@@ -37,20 +36,22 @@ def spectral_flux(
     seqs: DataFrame,
     frame_length: int = FRAME_LENGTH,
     hop: int = HOP_LENGTH,
-    sample_rate: int = SAMPLE_RATE,
     token_scale: float = TOKEN_SCALE,
     onset_sigma: float = 1.5,
 ) -> DataFrame:
     """(doc_id, frame_idx, flux, is_onset) from sequences(doc_id, tokens).
 
     flux[t] = sum over bins of max(0, |S_t| - |S_{t-1}|), 0.0 for the
-    first frame of a doc; is_onset = flux > mean + onset_sigma * stddev
-    of the doc's round-6 flux (population stddev — deterministic and
-    identical in the SQL twin)."""
-    spec = _spectra(seqs, frame_length, hop, sample_rate, token_scale)
+    first frame of a doc; NULL (and is_onset NULL) when S_t or S_{t-1} is
+    a NULL (non-finite) spectrum. is_onset = flux > mean + onset_sigma *
+    stddev of the doc's round-6 flux (population stddev — deterministic
+    and identical in the SQL twin)."""
+    spec = _spectra(seqs, frame_length, hop, token_scale)
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     prev = F.lag("_spec").over(w)
-    flux_raw = F.when(prev.isNull(), F.lit(0.0)).otherwise(
+    # "first frame" is no previous row, not a NULL previous spectrum
+    first = F.lag("frame_idx").over(w).isNull() & F.col("_spec").isNotNull()
+    flux_raw = F.when(first, F.lit(0.0)).otherwise(
         F.aggregate(
             F.zip_with("_spec", prev, lambda a, b: F.greatest(a - b, F.lit(0.0))),
             F.lit(0.0),
@@ -73,7 +74,6 @@ def spectral_contrast(
     seqs: DataFrame,
     frame_length: int = FRAME_LENGTH,
     hop: int = HOP_LENGTH,
-    sample_rate: int = SAMPLE_RATE,
     token_scale: float = TOKEN_SCALE,
     n_bands: int = 3,
     alpha: float = 0.2,
@@ -85,7 +85,8 @@ def spectral_contrast(
 
     Same kernel spectrum as spectral_flux; the band split / sort /
     quantile means are pure JVM array expressions after it — no extra
-    Python, no shuffle (narrow over the framed rows)."""
+    Python, no shuffle (narrow over the framed rows). A frame with a
+    NULL (non-finite) spectrum gives NULL in every band."""
     nb = frame_length // 2 + 1
     if n_bands > nb:
         raise ValueError(
@@ -98,7 +99,7 @@ def spectral_contrast(
             f"n_bands={n_bands} yields an empty band for {nb} bins "
             f"(edges {edges}) — use fewer bands"
         )
-    spec = _spectra(seqs, frame_length, hop, sample_rate, token_scale)
+    spec = _spectra(seqs, frame_length, hop, token_scale)
     eps = F.lit(1e-10)
     cols = [F.col("doc_id"), F.col("frame_idx")]
     for b in range(n_bands):

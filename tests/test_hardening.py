@@ -197,6 +197,38 @@ def test_doc_profile_fused_keeps_bigint_doc_id(spark):
     assert rows == {7: None, 8: "empty"}
 
 
+def test_flux_and_contrast_null_on_nonfinite_frames(spark):
+    """A NULL token element makes its frames' spectrum NULL: flux is NULL
+    on every frame whose own or previous spectrum is NULL (not 0.0 as if
+    the doc started there), and contrast is a NULL row on the bad frames.
+    64 tokens at F=16, H=8: frames 1 and 2 cover element 16."""
+    from audiopro_essentia_spark.operators.flux import (
+        spectral_contrast,
+        spectral_flux,
+    )
+
+    toks = (
+        [1000 + 37 * (i % 5) for i in range(16)]
+        + [None]
+        + [3000 + 11 * (i % 7) for i in range(47)]
+    )
+    df = spark.createDataFrame([("d", toks)], "doc_id string, tokens array<int>")
+    flux = sorted(
+        (r.frame_idx, r.flux, r.is_onset)
+        for r in spectral_flux(df, frame_length=16, hop=8).collect()
+    )
+    assert [f for f, _, _ in flux] == list(range(7))
+    assert flux[0][1:] == (0.0, 0)
+    for f, v, o in flux:
+        assert (v is None) == (f in (1, 2, 3)) and (o is None) == (v is None)
+    con = sorted(
+        (r.frame_idx, r.contrast_0, r.contrast_1, r.contrast_2)
+        for r in spectral_contrast(df, frame_length=16, hop=8).collect()
+    )
+    for f, *c in con:
+        assert c == [None] * 3 if f in (1, 2) else None not in c
+
+
 def test_asof_rejects_matched_ts_in_right_values(spark):
     from audiopro_essentia_spark.operators.asof import asof_join
 
