@@ -37,12 +37,25 @@ heavy keys are bounded upstream by doc size, which the corpus guarantees
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 
-def _ts_us(c: Column) -> Column:
-    return F.unix_micros(c.cast("timestamp"))
+def _q(name: str) -> str:
+    """`name` as a SQL identifier (dots, spaces and backticks included)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _orderable(dt) -> bool:
+    """MapType is not orderable in Spark, at any nesting depth."""
+    if isinstance(dt, MapType):
+        return False
+    if isinstance(dt, ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
 
 
 def asof_join(
@@ -62,9 +75,13 @@ def asof_join(
     Output = all left rows + right_values columns (null when no match /
     outside tolerance) + `matched_ts_col` (the matched right timestamp).
     """
+    # the plan is built from SQL text over one read of each schema: every
+    # Column-API call costs driver round trips plus a call-site capture,
+    # ~0.25 s over the flagship's ~20 left columns on a 4-core host
+    rschema = right.schema
     if right_values is None:
         right_values = tuple(
-            c for c in right.columns if c not in on and c != right_ts
+            c for c in rschema.names if c not in on and c != right_ts
         )
     clash = (set(right_values) | {matched_ts_col}) & set(left.columns)
     if clash:
@@ -83,7 +100,7 @@ def asof_join(
     # this filter the union path's NULLS-FIRST sort would forward-fill it
     # into every left row before the first real right row (silent wrong
     # data), and pandas merge_asof refuses NULL right keys outright
-    right = right.where(F.col(right_ts).isNotNull())
+    right = right.where(f"{_q(right_ts)} IS NOT NULL")
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"direction must be backward/forward/nearest, got {direction!r}"
@@ -94,36 +111,23 @@ def asof_join(
             tolerance_us, direction, matched_ts_col,
         )
 
-    on = tuple(on)
-    lcols = [c for c in left.columns]
-    l2 = left.select(
-        *on,
-        _ts_us(F.col(left_ts)).alias("_ts"),
-        F.lit(1).alias("_side"),
-        F.struct(*[F.col(c) for c in lcols]).alias("_lv"),
-        F.lit(None).cast(
-            right.select(
-                F.struct(
-                    _ts_us(F.col(right_ts)).alias("_rts"),
-                    *[F.col(c) for c in right_values],
-                ).alias("x")
-            ).schema["x"].dataType.simpleString()
-        ).alias("_rv"),
+    keys = [_q(k) for k in on]
+    # left rows carry their whole row as `_lv`, right rows their match as
+    # `_rv`; unionByName fills each side's missing struct with a typed NULL
+    l2 = left.selectExpr(
+        *keys,
+        f"unix_micros(CAST({_q(left_ts)} AS TIMESTAMP)) AS _ts",
+        "1 AS _side",
+        "struct(*) AS _lv",
     )
-    r2 = right.select(
-        *on,
-        _ts_us(F.col(right_ts)).alias("_ts"),
-        F.lit(0).alias("_side"),  # sorts BEFORE left at equal ts -> tie matches
-        F.lit(None).cast(
-            left.select(F.struct(*[F.col(c) for c in lcols]).alias("x"))
-            .schema["x"].dataType.simpleString()
-        ).alias("_lv"),
-        F.struct(
-            _ts_us(F.col(right_ts)).alias("_rts"),
-            *[F.col(c) for c in right_values],
-        ).alias("_rv"),
+    rts = f"unix_micros(CAST({_q(right_ts)} AS TIMESTAMP))"
+    r2 = right.selectExpr(
+        *keys,
+        f"{rts} AS _ts",
+        "0 AS _side",  # sorts BEFORE left at equal ts -> tie matches
+        f"struct({', '.join([f'{rts} AS _rts', *map(_q, right_values)])}) AS _rv",
     )
-    u = l2.unionByName(r2)
+    u = l2.unionByName(r2, allowMissingColumns=True)
 
     # `_rv` as the final sort key makes right-side ties on (key, ts)
     # deterministic (struct compare): last() picks the max struct, not an
@@ -131,74 +135,47 @@ def asof_join(
     # within its (_ts, _side) group; ignorenulls skips it). MapType is not
     # orderable in Spark — if any right_values column contains one, fall
     # back to (_ts, _side) ordering (tie choice then partition-dependent).
-    def _orderable(dt) -> bool:
-        from pyspark.sql.types import ArrayType, MapType, StructType
+    tie = ", _rv" if all(_orderable(rschema[c].dataType) for c in right_values) else ""
 
-        if isinstance(dt, MapType):
-            return False
-        if isinstance(dt, ArrayType):
-            return _orderable(dt.elementType)
-        if isinstance(dt, StructType):
-            return all(_orderable(f.dataType) for f in dt.fields)
-        return True
-
-    rschema = {f.name: f.dataType for f in right.schema.fields}
-    tie_keys = (
-        ["_rv"] if all(_orderable(rschema[c]) for c in right_values) else []
-    )
-
-    def _win(reverse: bool):
+    def _fill(reverse: bool) -> str:
         # forward scan = the same running-last over time REVERSED.
-        # desc_nulls_first keeps NULL-left-ts rows ahead of every right
-        # row in BOTH scan directions (plain desc puts NULLs last, which
+        # DESC NULLS FIRST keeps NULL-left-ts rows ahead of every right
+        # row in BOTH scan directions (plain DESC puts NULLs last, which
         # would hand a NULL-ts left row the earliest right row — silent
-        # wrong data); _side asc keeps right (0) before left (1) at equal
+        # wrong data); _side ASC keeps right (0) before left (1) at equal
         # ts, so ties match in both directions, matching merge_asof.
-        ts = F.desc_nulls_first("_ts") if reverse else F.asc("_ts")
+        ts = "_ts DESC NULLS FIRST" if reverse else "_ts"
         return (
-            Window.partitionBy(*on)
-            .orderBy(ts, "_side", *tie_keys)
-            .rowsBetween(Window.unboundedPreceding, 0)
+            f"last(_rv, true) OVER (PARTITION BY {', '.join(keys)} "
+            f"ORDER BY {ts}, _side{tie} "
+            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )
 
-    last_rv = F.last("_rv", ignorenulls=True)
     if direction == "backward":
-        filled = u.withColumn("_rv_f", last_rv.over(_win(False)))
-        dist = F.col("_ts") - F.col("_rv_f._rts")
+        filled = u.selectExpr("*", f"{_fill(False)} AS _rv_f")
+        dist = "_ts - _rv_f._rts"
     elif direction == "forward":
-        filled = u.withColumn("_rv_f", last_rv.over(_win(True)))
-        dist = F.col("_rv_f._rts") - F.col("_ts")
-    else:  # nearest: both scans share ONE shuffle (same partitionBy);
+        filled = u.selectExpr("*", f"{_fill(True)} AS _rv_f")
+        dist = "_rv_f._rts - _ts"
+    else:  # nearest: both scans share ONE shuffle (same partitioning);
         # equal distances resolve backward, pandas merge_asof's rule
-        bdist = F.col("_ts") - F.col("_b._rts")
-        fdist = F.col("_f._rts") - F.col("_ts")
-        filled = (
-            u.withColumn("_b", last_rv.over(_win(False)))
-            .withColumn("_f", last_rv.over(_win(True)))
-            .withColumn(
-                "_rv_f",
-                F.when(F.col("_b").isNull(), F.col("_f"))
-                .when(F.col("_f").isNull(), F.col("_b"))
-                .when(bdist <= fdist, F.col("_b"))
-                .otherwise(F.col("_f")),
-            )
+        filled = u.selectExpr(
+            "*", f"{_fill(False)} AS _b", f"{_fill(True)} AS _f"
+        ).selectExpr(
+            "*",
+            "CASE WHEN _b IS NULL THEN _f WHEN _f IS NULL THEN _b "
+            "WHEN _ts - _b._rts <= _f._rts - _ts THEN _b ELSE _f END AS _rv_f",
         )
-        dist = F.abs(F.col("_ts") - F.col("_rv_f._rts"))
-    filled = filled.filter(F.col("_side") == 1)
+        dist = "abs(_ts - _rv_f._rts)"
 
-    in_tol = (
-        F.lit(True)
-        if tolerance_us is None
-        else dist <= F.lit(int(tolerance_us))
+    keep = "_rv_f IS NOT NULL"
+    if tolerance_us is not None:
+        keep += f" AND {dist} <= {int(tolerance_us)}"
+    return filled.where("_side = 1").selectExpr(
+        "_lv.*",
+        f"CASE WHEN {keep} THEN timestamp_micros(_rv_f._rts) END AS {_q(matched_ts_col)}",
+        *[f"CASE WHEN {keep} THEN _rv_f.{_q(c)} END AS {_q(c)}" for c in right_values],
     )
-    keep = F.col("_rv_f").isNotNull() & in_tol
-    out_cols: list[Column] = [F.col(f"_lv.{c}").alias(c) for c in lcols]
-    out_cols.append(
-        F.when(keep, F.timestamp_micros(F.col("_rv_f._rts"))).alias(matched_ts_col)
-    )
-    for c in right_values:
-        out_cols.append(F.when(keep, F.col(f"_rv_f.{c}")).alias(c))
-    return filled.select(*out_cols)
 
 
 def _asof_cogroup(
@@ -217,8 +194,8 @@ def _asof_cogroup(
 
     # normalize ts dtypes BEFORE the cogroup: merge_asof needs real
     # datetimes on both sides (string ts columns sort lexicographically
-    # into an object-dtype MergeError; the union path gets this cast via
-    # _ts_us, this path must match)
+    # into an object-dtype MergeError; the union path casts to timestamp
+    # too, this path must match)
     left = left.withColumn(left_ts, F.col(left_ts).cast("timestamp"))
     right = right.withColumn(right_ts, F.col(right_ts).cast("timestamp"))
 

@@ -209,21 +209,21 @@ def fused_frame_features(
                         out[c] = pa.array(enrich_f[lo:hi, j], from_pandas=True)
                 yield pa.RecordBatch.from_pydict(out)
 
-    return seqs.select(*cols).mapInArrow(gen, ddl)
+    return seqs.selectExpr(*cols).mapInArrow(gen, ddl)
 
 
-def nest_frequency_bands(df: DataFrame) -> DataFrame:
+def nest_frequency_bands(df: DataFrame, last: tuple[str, ...] = ()) -> DataFrame:
     """Re-nest fb_* columns into frequency_bands struct (reference
-    types.py:134-140 shape)."""
-    from pyspark.sql import functions as F
-
-    fb_cols = [f"fb_{b}" for b in BAND_NAMES if f"fb_{b}" in df.columns]
-    if not fb_cols:
+    types.py:134-140 shape) and move the `last` columns to the end, in
+    one projection of SQL text (a Column-API call per column costs a
+    driver round trip and a call-site capture each)."""
+    cols = df.columns
+    fb_cols = [f"fb_{b}" for b in BAND_NAMES if f"fb_{b}" in cols]
+    if not fb_cols and not last:
         return df
-    keep = [c for c in df.columns if c not in fb_cols]
-    return df.select(
-        *keep,
-        F.struct(*[F.col(f"fb_{b}").alias(b) for b in BAND_NAMES]).alias(
-            "frequency_bands"
-        ),
+    bands = ", ".join(f"fb_{b} AS {b}" for b in BAND_NAMES)
+    return df.selectExpr(
+        *[c for c in cols if c not in fb_cols and c not in last],
+        *([f"struct({bands}) AS frequency_bands"] if fb_cols else []),
+        *last,
     )

@@ -86,15 +86,16 @@ def analyze_sequences(
         # out_dir (the bench path) the frame path never reads the
         # profile, and an eager checkpoint would only add cost.
         profile = profile.localCheckpoint()
-    quarantined = profile.filter(F.col("reject_reason").isNotNull())
-    doc_meta = profile.filter(F.col("reject_reason").isNull()).drop("reject_reason")
+    quarantined = profile.where("reject_reason IS NOT NULL")
+    doc_meta = profile.where("reject_reason IS NULL").drop("reject_reason")
 
     # framing, validation and the J2 enrichment all happen inside the
     # kernel (operators/fused.py): each doc's tokens cross to Python once,
     # rejected docs are skipped without a filter scan, and the doc stats
     # need no profile scan or join. Every input row emits only its own
     # frames, so a doc_id repeated k times yields k x its frames.
-    feats = nest_frequency_bands(
+    # the doc stats come last (the reference J2 join's column order)
+    enriched = nest_frequency_bands(
         fused_frame_features(
             raw,
             features=features,
@@ -104,11 +105,8 @@ def analyze_sequences(
             start_sample=start_sample,
             validate=True,
             doc_stats=True,
-        )
-    )
-    # the doc stats come last (the reference J2 join's column order)
-    enriched = feats.select(
-        *[c for c in feats.columns if c not in DOC_ENRICH_COLS], *DOC_ENRICH_COLS
+        ),
+        last=DOC_ENRICH_COLS,
     )
 
     if repartition_output:

@@ -32,7 +32,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's config profile."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # the CPUs this process may run on, not the host's count or a constant
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     # local mode: shuffle partitions ~ cores; a real cluster would use
     # ~2-3x total cores and let AQE coalesce.
@@ -63,6 +64,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
+        # pyspark.daemon without its per-task zip directory re-reads
+        .config("spark.python.daemon.module", "audiopro_essentia_spark.daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

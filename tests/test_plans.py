@@ -452,3 +452,78 @@ def test_sessionize_shares_one_sort(spark):
     simple = out._jdf.queryExecution().executedPlan().toString()
     assert simple.count("- Sort [") == 1
     assert simple.count("Exchange") == 1
+
+
+PYTHON_NODES = (
+    "MapInPandas",
+    "MapInArrow",
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+
+
+def _asof_plan_counts(df, key: str) -> dict:
+    """Counts over the physical plan: all Exchanges, the hash Exchanges
+    on `key` alone, Window nodes and Python nodes."""
+    import re
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    plan = buf.getvalue()
+    return {
+        "plan": plan,
+        "exchanges": plan.count("Exchange "),
+        "key_exchanges": len(
+            re.findall(rf"Exchange hashpartitioning\({key}#\d+L?, \d+\)", plan)
+        ),
+        "windows": len(re.findall(r"\bWindow \[", plan)),
+        "python": sum(plan.count(n) for n in PYTHON_NODES),
+    }
+
+
+@pytest.fixture(scope="module")
+def flagship_frames_and_labels(spark, tiny_seqs, tiny_table, tmp_path_factory):
+    import pyarrow.parquet as pq
+
+    from audiopro_essentia_spark.fixtures import make_labels
+    from audiopro_essentia_spark.plans.pipeline import analyze_sequences
+
+    p = str(tmp_path_factory.mktemp("asof_plan") / "labels.parquet")
+    pq.write_table(make_labels(tiny_table.column("doc_id").to_pylist()), p)
+    path = tiny_seqs.inputFiles()[0]
+    feats = analyze_sequences(spark, path, repartition_output=False)["frame_features"]
+    return feats, spark.read.parquet(p)
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_flagship_asof_is_one_key_shuffle(spark, flagship_frames_and_labels, direction):
+    """The flagship's as-of join (frames <- labels on doc_id) adds ONE
+    hash Exchange on the key and no Python node to the one-token-pass
+    frame path. backward and forward scan once (one Window); nearest runs
+    both scans over that same shuffle (two Windows)."""
+    from audiopro_essentia_spark.operators.asof import asof_join
+
+    feats, labels = flagship_frames_and_labels
+    out = asof_join(
+        feats, labels, left_ts="available_ts", right_ts="label_ts", direction=direction
+    )
+    c = _asof_plan_counts(out, "doc_id")
+    assert c["exchanges"] == 1 and c["key_exchanges"] == 1, c["plan"]
+    assert c["windows"] == (2 if direction == "nearest" else 1), c["plan"]
+    assert c["python"] == 1, c["plan"]  # the fused kernel's map only
+
+
+def test_q_asof_join_is_one_key_shuffle(spark):
+    """q_asof_join: one hash Exchange on user_id for the join (the other
+    Exchange is the purchases' pre-aggregate on (user_id, ts)), one
+    Window, no Python node."""
+    import __spark_entry__ as e
+
+    c = _asof_plan_counts(e.queries()["asof_join"](spark, SF), "user_id")
+    assert c["key_exchanges"] == 1, c["plan"]
+    assert c["exchanges"] == 2, c["plan"]
+    assert c["windows"] == 1, c["plan"]
+    assert c["python"] == 0, c["plan"]
